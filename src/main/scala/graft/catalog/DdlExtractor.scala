@@ -1,32 +1,50 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
-import scala.util.{Failure, Success, Try}
+import org.apache.spark.sql.{GraftPlanApi, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+import org.apache.spark.sql.execution.command.{DDLUtils, ShowCreateTableAsSerdeCommand, ShowCreateTableCommand}
+import org.apache.spark.sql.execution.datasources.v2.ShowCreateTableExec
+import org.apache.spark.sql.types.StringType
+import scala.util.Try
 
-/** Per-table CREATE DDL lookup + text post-processing
+/** Per-table CREATE DDL synthesis + text post-processing
   * (`HiveClient.java:82-92`, `ExtractHiveDDL.java:154-191`).
   *
   * The reference delegates DDL synthesis to HiveServer2's
-  * `SHOW CREATE TABLE` and post-fixes the header; here Spark SQL's
-  * `ShowCreateTableCommand` does the synthesis (driver-side catalog
-  * command — no shuffle, no executors). Datasource tables emit Spark
-  * DDL (`USING parquet`); Hive-SerDe tables that Spark cannot express
-  * in `USING` form fall back to `SHOW CREATE TABLE ... AS SERDE`
-  * (Hive-dialect DDL), keeping every table extractable.
+  * `SHOW CREATE TABLE` and post-fixes the header. Here the DDL comes
+  * from the command Spark's own `SHOW CREATE TABLE` resolves to
+  * (`ResolveSessionCatalog`), run directly on metadata the caller has
+  * already fetched, so no SQL text is parsed or analysed per table:
+  *  - datasource tables: `ShowCreateTableExec` over the `CatalogTable`,
+  *    with CHAR/VARCHAR columns mapped as `getTableMetadata` maps them
+  *    (`USING parquet` DDL, no metastore call);
+  *  - views and Hive-SerDe tables: `ShowCreateTableCommand`, falling
+  *    back to `ShowCreateTableAsSerdeCommand` (Hive-dialect DDL) for
+  *    tables Spark cannot express in `USING` form, keeping every table
+  *    extractable. These commands look the table up again by name.
+  * The text is byte-identical to what `SHOW CREATE TABLE` returns.
   */
 object DdlExtractor {
+
+  private val output = Seq(AttributeReference("createtab_stmt", StringType)())
 
   /** DDL text of one table, as the lines Hive's RowSet would carry
     * (`HiveClient.java:85-89` consumes column 0 of each row).
     */
-  def createTableLines(spark: SparkSession, db: String, table: String): Seq[String] = {
-    val qualified = s"`$db`.`$table`"
-    Try(spark.sql(s"SHOW CREATE TABLE $qualified").head().getString(0)) match {
-      case Success(ddl) => ddl.linesIterator.toSeq
-      case Failure(_) =>
-        spark.sql(s"SHOW CREATE TABLE $qualified AS SERDE").head().getString(0)
-          .linesIterator.toSeq
-    }
+  def createTableLines(spark: SparkSession, meta: CatalogTable): Seq[String] = {
+    val ddl =
+      if (meta.tableType == CatalogTableType.VIEW || DDLUtils.isHiveTable(meta))
+        Try(ShowCreateTableCommand(meta.identifier, output).run(spark))
+          .getOrElse(ShowCreateTableAsSerdeCommand(meta.identifier, output).run(spark))
+          .head.getString(0)
+      else {
+        val v1 = meta.copy(schema = CharVarcharUtils.replaceCharVarcharWithStringInSchema(meta.schema))
+        ShowCreateTableExec(output, GraftPlanApi.resolvedV1Table(spark, v1))
+          .executeCollect().head.getString(0)
+      }
+    ddl.linesIterator.toSeq
   }
 
   /** Header repair for Hive-2.3-style DDL, ported with the reference's
@@ -64,8 +82,12 @@ object DdlExtractor {
     * documented deviation: the reference emitted them verbatim and the
     * target Hive reset them on replay anyway.
     */
+  def tableCreateSql(spark: SparkSession, meta: CatalogTable): String =
+    assemble(stripVolatileProps(createTableLines(spark, meta)))
+
+  /** [[tableCreateSql]] of a table looked up by name (one fetch). */
   def tableCreateSql(spark: SparkSession, db: String, table: String): String =
-    assemble(stripVolatileProps(createTableLines(spark, db, table)))
+    tableCreateSql(spark, CatalogOps.getTable(spark, db, table))
 
   /** Drop volatile table properties (e.g. Hive's `transient_lastDdlTime`)
     * from DDL lines so extracted scripts are stable across runs — used

@@ -35,11 +35,9 @@ object ExtractMain {
       sys.env.get("GRAFT_METASTORE_DIR"))
     spark.sparkContext.setLogLevel("WARN")
     try {
-      val dbs = CatalogOps.listDatabases(spark, databasePattern)
-      println(s"${dbs.size} databases")
-      println(s"${CatalogOps.countTables(spark, dbs, tablePattern)} total tables")
       val result = DdlExtract.extractToFile(spark, databasePattern, tablePattern,
         Paths.get(outFile), cfg)
+      println(s"${result.databases.size} databases")
       println(s"extracted ${result.tableCount} tables (${result.errorCount} errors)")
       result.reports.filter(_.error.nonEmpty)
         .foreach(r => System.err.println(s"ERROR ${r.db}.${r.table}: ${r.error.get}"))

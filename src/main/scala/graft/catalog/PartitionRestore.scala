@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 
 /** Partition-restore planning: the MSCK-vs-ADD decision table and the
   * partition statement formatting
@@ -83,18 +83,18 @@ object PartitionRestore {
 
   /** Restore statements for one table: empty for unpartitioned tables
     * (`ExtractHiveDDL.java:200-203`), one MSCK line, or N sorted ADD
-    * PARTITION lines. Reads `CatalogTablePartition`s from the session
-    * catalog — spec and location in one object, no ordering assumption.
+    * PARTITION lines. Planned from the table's fetched metadata; the
+    * metastore is asked for `CatalogTablePartition`s (spec and location
+    * in one object, no ordering assumption) only if the table is
+    * partitioned.
     */
-  def restoreLines(spark: SparkSession, db: String, table: String,
-                   cfg: ExtractConfig): Seq[String] = {
-    val cat = spark.sessionState.catalog
-    val ident = TableIdentifier(table, Some(db))
-    val tmeta = cat.getTableMetadata(ident)
+  def restoreLines(spark: SparkSession, tmeta: CatalogTable, cfg: ExtractConfig): Seq[String] = {
     // Hive's listPartitions throws on unpartitioned tables (the
     // reference's listPartitionNames returned [] — ExtractHiveDDL.java:200-203)
     if (tmeta.partitionColumnNames.isEmpty) return Seq.empty
-    val parts = cat.listPartitions(ident)
+    val db = tmeta.identifier.database.get
+    val table = tmeta.identifier.table
+    val parts = spark.sessionState.catalog.externalCatalog.listPartitions(db, table)
     if (parts.isEmpty) return Seq.empty
 
     val tableRootSlash = tmeta.location.toString.stripSuffix("/") + "/"
@@ -126,4 +126,9 @@ object PartitionRestore {
         }.sortBy(_._1.mkString("/")).map(_._2)
     }
   }
+
+  /** [[restoreLines]] of a table looked up by name (one fetch). */
+  def restoreLines(spark: SparkSession, db: String, table: String,
+                   cfg: ExtractConfig): Seq[String] =
+    restoreLines(spark, CatalogOps.getTable(spark, db, table), cfg)
 }

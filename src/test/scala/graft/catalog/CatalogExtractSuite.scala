@@ -4,6 +4,7 @@ import graft.TestSpark
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.Try
 
 /** End-to-end catalog layer against an embedded-Derby Hive metastore:
   * the FIXTURES.md §B fixtures, all flag combinations, and round-trip
@@ -76,6 +77,25 @@ class CatalogExtractSuite extends AnyFunSuite with BeforeAndAfterAll {
     s.sql("""CREATE TABLE fixdb2.csv_serde_hive (a STRING, b STRING)
             |ROW FORMAT SERDE 'org.apache.hadoop.hive.serde2.OpenCSVSerde'
             |STORED AS TEXTFILE""".stripMargin)
+
+    // ddleq — one table per DDL shape, compared against SHOW CREATE TABLE
+    s.sql("CREATE DATABASE IF NOT EXISTS ddleq")
+    s.sql("CREATE TABLE ddleq.ds_chars (c CHAR(5), v VARCHAR(10), s STRING) USING parquet")
+    s.sql("CREATE TABLE ddleq.hive_chars (c CHAR(5), v VARCHAR(10), s STRING) STORED AS ORC")
+    s.sql("""CREATE TABLE ddleq.commented (a INT COMMENT 'the key', b STRING)
+            |USING parquet OPTIONS ('compression' = 'snappy')
+            |COMMENT 'a commented table'
+            |TBLPROPERTIES ('owner.team' = 'etl', 'quality' = 'gold')""".stripMargin)
+    s.sql("""CREATE TABLE ddleq.bucketed_sorted (a INT, b STRING) USING parquet
+            |CLUSTERED BY (a) SORTED BY (b) INTO 8 BUCKETS""".stripMargin)
+    s.sql("""CREATE TABLE ddleq.hive_orc_part (a INT, b STRING)
+            |PARTITIONED BY (p STRING) STORED AS ORC""".stripMargin)
+    s.sql("ALTER TABLE ddleq.hive_orc_part ADD PARTITION (p='x')")
+    s.sql("""CREATE TABLE ddleq.csv_serde (a STRING, b STRING)
+            |ROW FORMAT SERDE 'org.apache.hadoop.hive.serde2.OpenCSVSerde'
+            |STORED AS TEXTFILE""".stripMargin)
+    s.sql("CREATE TABLE ddleq.with_default (a INT, b INT DEFAULT 42) USING parquet")
+    s.sql("CREATE VIEW ddleq.a_view AS SELECT a, b FROM ddleq.commented WHERE a > 0")
   }
 
   // --- catalog sources (§2.1 #1, #2) -----------------------------------
@@ -119,6 +139,51 @@ class CatalogExtractSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(sql.contains(s"LOCATION 'file:$dataDir/fruits'"))
     assert(sql.endsWith(";"))
     assert(!sql.contains("transient_lastDdlTime"))
+    // names resolve case-insensitively, as they do in SQL
+    assert(DdlExtractor.tableCreateSql(spark, "fixdb", "Fruits") == sql)
+  }
+
+  test("DDL from fetched metadata is byte-identical to SHOW CREATE TABLE") {
+    // the SQL round trip the extractor replaced, AS SERDE fallback included
+    def viaSql(t: String): String = {
+      val q = s"`ddleq`.`$t`"
+      val ddl = Try(spark.sql(s"SHOW CREATE TABLE $q").head().getString(0))
+        .getOrElse(spark.sql(s"SHOW CREATE TABLE $q AS SERDE").head().getString(0))
+      DdlExtractor.assemble(DdlExtractor.stripVolatileProps(ddl.linesIterator.toSeq))
+    }
+    val names = Seq("ds_chars", "hive_chars", "commented", "bucketed_sorted",
+      "hive_orc_part", "csv_serde", "with_default", "a_view")
+    assert(CatalogOps.listTables(spark, "ddleq", "*") == names.sorted)
+    val metas = CatalogOps.getTables(spark, "ddleq", names)
+    for ((t, meta) <- names.zip(metas)) {
+      val expected = viaSql(t)
+      assert(DdlExtractor.tableCreateSql(spark, meta.get) == expected, s"bulk-fetched DDL of $t")
+      assert(DdlExtractor.tableCreateSql(spark, "ddleq", t) == expected, s"name-based DDL of $t")
+    }
+    // the fixtures reach the shapes they are named for
+    assert(viaSql("ds_chars").contains("c CHAR(5)") && viaSql("ds_chars").contains("v VARCHAR(10)"))
+    assert(viaSql("csv_serde").contains("ROW FORMAT SERDE 'org.apache.hadoop.hive.serde2.OpenCSVSerde'"))
+    assert(viaSql("with_default").contains("DEFAULT 42"))
+    assert(viaSql("bucketed_sorted").contains("SORTED BY"))
+    assert(viaSql("a_view").startsWith("CREATE VIEW"))
+  }
+
+  test("table dropped between listing and fetch → error section, others extract") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS dropdb")
+    Seq("a_keep", "b_doomed", "c_keep").foreach { t =>
+      spark.sql(s"CREATE TABLE IF NOT EXISTS dropdb.$t (x INT) USING parquet")
+    }
+    val listed = CatalogOps.listTables(spark, "dropdb", "*")
+    spark.sql("DROP TABLE dropdb.b_doomed")
+    val sections = DdlExtract.databaseSections(spark, "dropdb", listed, ctx)
+    assert(sections.map(_._2.table) == Seq("a_keep", "b_doomed", "c_keep"))
+    assert(sections.map(_._2.error.nonEmpty) == Seq(false, true, false))
+    assert(sections(1)._1.startsWith("\n-- ERROR extracting dropdb.b_doomed: "))
+    assert(sections(0)._1.contains("-- a_keep\n") && sections(2)._1.contains("-- c_keep\n"))
+    // a database dropped mid-run fails each of its tables, not the run
+    spark.sql("DROP DATABASE dropdb CASCADE")
+    val gone = DdlExtract.databaseSections(spark, "dropdb", listed, ctx)
+    assert(gone.size == 3 && gone.forall(_._2.error.nonEmpty))
   }
 
   // --- partition restore (§2.1 #9-#13) ---------------------------------

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.TestSpark
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Catalog layer at volume: the reference's operating envelope was
@@ -19,8 +20,13 @@ class CatalogScaleSpec extends AnyFunSuite {
     names.foreach { t =>
       s.sql(s"CREATE TABLE IF NOT EXISTS scaledb.$t (a INT, b STRING) USING parquet")
     }
+    def hiveCalls = HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS.getCount
+    val before = hiveCalls
     val result = DdlExtract.extract(s, "scaledb", "*", ExtractConfig())
+    val calls = hiveCalls - before
     assert(result.tableCount == 30 && result.errorCount == 0)
+    // listing plus one bulk fetch per database: no per-table round trip
+    assert(calls < 30, s"$calls Hive client calls for 30 tables")
     // every table got a complete section, emitted in sorted order
     val positions = names.map(t => result.script.indexOf(s"-- $t\n"))
     assert(positions.forall(_ >= 0))
