@@ -1,7 +1,8 @@
 package graft.catalog
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogUtils}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 
 /** Partition-restore planning: the MSCK-vs-ADD decision table and the
   * partition statement formatting
@@ -46,10 +47,11 @@ object PartitionRestore {
 
   /** `(k1='v1',k2='v2')` from an ordered spec; values quote-escaped
     * (the reference's raw string surgery breaks on `'` — documented
-    * deviation, SURVEY §7.3 hard part 4).
+    * deviation, SURVEY §7.3 hard part 4) and column names
+    * backtick-quoted only where the parser needs it (`part col`).
     */
   def specSql(spec: Seq[(String, String)]): String =
-    spec.map { case (k, v) => s"$k='${v.replace("'", "\\'")}'" }
+    spec.map { case (k, v) => s"${QuotingUtils.quoteIfNeeded(k)}='${v.replace("'", "\\'")}'" }
       .mkString("(", ",", ")")
 
   /** Reference-compatible transform of a partition *name* string
@@ -69,7 +71,9 @@ object PartitionRestore {
   /** `ALTER TABLE ... ADD PARTITION (...) LOCATION "...";`
     * (`ExtractHiveDDL.java:263-276`): location relative to the table
     * root in context mode, absolute otherwise; double-quoted as in the
-    * reference.
+    * reference. `location` is the decoded path (as Spark's DDL prints
+    * it): replay re-escapes the string, so a URI-escaped `%27` would
+    * land the partition in a directory literally named `%27`.
     */
   def addPartitionSql(db: String, table: String, tableRootSlash: String,
                       spec: Seq[(String, String)], location: String,
@@ -97,7 +101,7 @@ object PartitionRestore {
     val parts = spark.sessionState.catalog.externalCatalog.listPartitions(db, table)
     if (parts.isEmpty) return Seq.empty
 
-    val tableRootSlash = tmeta.location.toString.stripSuffix("/") + "/"
+    val tableRootSlash = CatalogUtils.URIToString(tmeta.location).stripSuffix("/") + "/"
     val pcols = tmeta.partitionColumnNames
 
     val hasDefaultPartition =
@@ -110,19 +114,18 @@ object PartitionRestore {
     // at :231-232 — contradicting README.md:39-41 (default → MSCK). The
     // marker is masked before the case check so the two conditions stay
     // independent, as the README documents.
-    val hasNonLowercase = parts.exists { p =>
-      val rel = p.location.toString.replace(tableRootSlash, "")
-        .replace(DefaultPartitionValue, "")
+    val locations = parts.map(p => CatalogUtils.URIToString(p.location))
+    val hasNonLowercase = locations.exists { loc =>
+      val rel = loc.replace(tableRootSlash, "").replace(DefaultPartitionValue, "")
       rel.toLowerCase != rel
     }
 
     decide(hasDefaultPartition, hasNonLowercase, cfg.useAddSql, table) match {
       case UseMsck => Seq(msckSql(db, table, cfg))
       case UseAddPartitionSql =>
-        parts.map { p =>
+        parts.zip(locations).map { case (p, loc) =>
           val spec = pcols.map(c => c -> p.spec(c))
-          (spec.map(_._2), addPartitionSql(db, table, tableRootSlash, spec,
-            p.location.toString, cfg))
+          (spec.map(_._2), addPartitionSql(db, table, tableRootSlash, spec, loc, cfg))
         }.sortBy(_._1.mkString("/")).map(_._2)
     }
   }

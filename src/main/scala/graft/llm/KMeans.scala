@@ -68,25 +68,23 @@ object KMeans {
     // pinned: the seed collect plus every Lloyd round re-scans this,
     // and the input may carry an upstream exchange (Tables.load spreads
     // byte-small embedding files) — evaluate it once, like MLlib's
-    // handlePersistence. Bounded: (id, quantized vec) rows, reclaimed
-    // by the ContextCleaner when training returns.
+    // handlePersistence. Bounded: (id, quantized vec) rows, released
+    // when training returns.
     val sv = df.select(col(idCol), quantize(col(vecCol)).as("sv"))
-      .localCheckpoint()
-
-    // deterministic seed: the k smallest ids' vectors, cid = rank.
-    // k rows to the driver — the codebook collect, not a data collect.
-    var cents: Seq[(Int, Array[Long])] =
-      sv.orderBy(col(idCol)).limit(k).collect().zipWithIndex.map {
-        case (r, i) => (i, r.getSeq[Long](1).toArray)
-      }.toIndexedSeq
-
-    // an empty corpus trains an empty codebook (and must not reach
-    // assignExpr, whose empty-array literal would type as VOID) — the
-    // upstream-stage-emptied-the-corpus case a cleaning pipeline can
-    // legitimately produce (the sf1 scale probe hit it through q184's
-    // decontamination stage)
-    if (cents.isEmpty) return cents
-    lloyd(sv, idCol, cents, passes)
+    graft.Pin.during(sv) {
+      // deterministic seed: the k smallest ids' vectors, cid = rank.
+      // k rows to the driver — the codebook collect, not a data collect.
+      val cents: Seq[(Int, Array[Long])] =
+        sv.orderBy(col(idCol)).limit(k).collect().zipWithIndex.map {
+          case (r, i) => (i, r.getSeq[Long](1).toArray)
+        }.toIndexedSeq
+      // an empty corpus trains an empty codebook (and must not reach
+      // assignExpr, whose empty-array literal would type as VOID) — the
+      // upstream-stage-emptied-the-corpus case a cleaning pipeline can
+      // legitimately produce (the sf1 scale probe hit it through q184's
+      // decontamination stage)
+      if (cents.isEmpty) cents else lloyd(sv, idCol, cents, passes)
+    }
   }
 
   /** `passes - 1` Lloyd updates over a pre-quantized (idCol, sv)

@@ -66,23 +66,26 @@ object Lexical {
     * TakeOrdered. Output: (idCol, n_terms int, score double).
     */
   def bm25Search(df: DataFrame, idCol: String, textCol: String,
-                 terms: Seq[String], topK: Int = 20): DataFrame = {
-    val (hits, dfreq, corpus) = bm25Stats(df, idCol, textCol, terms)
-    bm25Score(hits, dfreq, corpus, idCol, topK)
-  }
+                 terms: Seq[String], topK: Int = 20): DataFrame =
+    bm25Stats(df, idCol, textCol, terms) { (hits, dfreq, corpus) =>
+      bm25Score(hits, dfreq, corpus, idCol, topK).localCheckpoint(true)
+    }
 
   /** The shared sufficient-statistics pass: per-(doc, term) postings
-    * with doc length, per-term document frequencies, corpus (N, T).
+    * with doc length, per-term document frequencies, corpus (N, T),
+    * handed to `use`.
     *
     * `hits` (query-term-filtered, so tiny) and the 1-row `corpus` are
-    * PINNED: every consumer reference otherwise re-runs a full corpus
-    * tokenize pass — [[bm25MaxScorePruned]] references the scored-term
-    * table five times (UB, seed, θ, sieve, final scoring), which was
-    * ~5 corpus scans per query (§2.4). Both pins are reduced tables
-    * (no text column), the documented persist discipline.
+    * pinned ([[graft.Pin]]) for the duration of `use`: every consumer
+    * reference otherwise re-runs a full corpus tokenize pass —
+    * [[bm25MaxScorePruned]] references the scored-term table five
+    * times (UB, seed, θ, sieve, final scoring), which was ~5 corpus
+    * scans per query (§2.4). Both pins are reduced tables (no text
+    * column). A frame `use` returns must not read the pins lazily.
     */
-  private def bm25Stats(df: DataFrame, idCol: String, textCol: String,
-                        terms: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
+  private def bm25Stats[T](df: DataFrame, idCol: String, textCol: String,
+                           terms: Seq[String])
+                          (use: (DataFrame, DataFrame, DataFrame) => T): T = {
     require(terms.nonEmpty, "need at least one query term")
     val toks = df.select(col(idCol), split(col(textCol), " ").as("t"))
       .select(col(idCol), size(col("t")).cast("long").as("dl"),
@@ -91,12 +94,11 @@ object Lexical {
     // free and carries the length through to the scoring join
     val hits = toks.where(col("tok").isin(terms: _*))
       .groupBy(col(idCol), col("dl"), col("tok")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfreq = hits.groupBy(col("tok")).agg(count(lit(1)).as("dft"))
     val corpus = df.select(size(split(col(textCol), " ")).cast("long").as("dl"))
       .agg(count(lit(1)).as("nd"), sum(col("dl")).as("tt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (hits, dfreq, corpus)
+    graft.Pin.during(hits, corpus) {
+      use(hits, hits.groupBy(col("tok")).agg(count(lit(1)).as("dft")), corpus)
+    }
   }
 
   /** The BM25 scoring tail over precomputed sufficient statistics —
@@ -224,23 +226,24 @@ object Lexical {
     * (the declared query shares q90's exhaustive-scoring oracle).
     */
   def bm25MaxScorePruned(df: DataFrame, idCol: String, textCol: String,
-                         terms: Seq[String], topK: Int = 20): DataFrame = {
-    val (hits, dfreq, corpus) = bm25Stats(df, idCol, textCol, terms)
-    val ts = scoredTerms(hits, dfreq, corpus)
-    val ub = ts.groupBy(col("tok")).agg(max(col("term_score")).as("ub"))
-    val topTerm = ub.orderBy(col("ub").desc, col("tok")).limit(1)
-      .select(col("tok"))
-    val seed = ts.join(broadcast(topTerm), "tok")
-      .select(col(idCol)).distinct()
-    val theta = scoreTail(ts.join(seed, Seq(idCol), "left_semi"), idCol, topK)
-      .agg(min(col("score")).as("th"), count(lit(1)).as("nseed"))
-    val survivors = ts.join(broadcast(ub), "tok")
-      .groupBy(col(idCol)).agg(sum(col("ub")).as("ub_doc"))
-      .crossJoin(broadcast(theta))
-      .where(col("nseed") < topK || col("ub_doc") + lit(1e-6) >= col("th"))
-      .select(col(idCol))
-    scoreTail(ts.join(survivors, Seq(idCol), "left_semi"), idCol, topK)
-  }
+                         terms: Seq[String], topK: Int = 20): DataFrame =
+    bm25Stats(df, idCol, textCol, terms) { (hits, dfreq, corpus) =>
+      val ts = scoredTerms(hits, dfreq, corpus)
+      val ub = ts.groupBy(col("tok")).agg(max(col("term_score")).as("ub"))
+      val topTerm = ub.orderBy(col("ub").desc, col("tok")).limit(1)
+        .select(col("tok"))
+      val seed = ts.join(broadcast(topTerm), "tok")
+        .select(col(idCol)).distinct()
+      val theta = scoreTail(ts.join(seed, Seq(idCol), "left_semi"), idCol, topK)
+        .agg(min(col("score")).as("th"), count(lit(1)).as("nseed"))
+      val survivors = ts.join(broadcast(ub), "tok")
+        .groupBy(col(idCol)).agg(sum(col("ub")).as("ub_doc"))
+        .crossJoin(broadcast(theta))
+        .where(col("nseed") < topK || col("ub_doc") + lit(1e-6) >= col("th"))
+        .select(col(idCol))
+      scoreTail(ts.join(survivors, Seq(idCol), "left_semi"), idCol, topK)
+        .localCheckpoint(true)
+    }
 
   // ------------------------------------------------ BM25 index store
 
@@ -271,7 +274,8 @@ object Lexical {
     // and dfreq/stats derive from the pin — the three separate write
     // actions otherwise re-ran the scan+explode+aggregate per substore
     // (3 corpus passes per append; q159 paid 9). Guide §2.4 (remove
-    // repeated passes) + §5 (persist only the reused, reduced table).
+    // repeated passes) + §5 (pin only the reused, reduced table, via
+    // graft.Pin).
     // stats from postings: (id, dl) is one row per document (dl is
     // functionally dependent on the id; split of a non-null text is
     // never empty, so every document owns ≥1 posting row), so
@@ -282,15 +286,14 @@ object Lexical {
         explode(col("t")).as("tok"))
       .groupBy(col(idCol), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Pin.during(postings) {
       postings.write.mode("append").parquet(s"$storePath/postings")
       postings.groupBy(col("tok")).agg(count(lit(1)).as("dft"))
         .write.mode("append").parquet(s"$storePath/dfreq")
       postings.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
         .agg(count(lit(1)).as("nd"), sum(col("dl")).as("tt"))
         .write.mode("append").parquet(s"$storePath/stats")
-    } finally postings.unpersist(blocking = false)
+    }
   }
 
   /** BM25 top-k served straight from an [[appendBm25Batch]] store:
@@ -376,15 +379,14 @@ object Lexical {
     val champs = scoredTerms(postings, dfreq, corpus)
       .withColumn("crn", row_number().over(w))
       .where(col("crn") <= m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Pin.during(champs) {
       champs.select(col("tok"), col(idCol))
         .write.mode("overwrite").parquet(s"$storePath/champions")
       champs.groupBy(col("tok"))
         .agg(count(lit(1)).as("kept"), min(col("term_score")).as("cub"))
         .join(dfreq, "tok")
         .write.mode("overwrite").parquet(s"$storePath/ub")
-    } finally champs.unpersist(blocking = false)
+    }
   }
 
   /** BM25 top-k served from champion lists, LOSSLESS: candidates come

@@ -3,7 +3,6 @@ package graft.llm
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Trained document-quality classifier — the fastText-class filter
   * that curates pretraining corpora (Joulin et al., "Bag of Tricks
@@ -141,9 +140,9 @@ object QualityClassifier {
     val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(success)) {
       val feats = featurize(docs, idCol, textCol, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val w = train(feats, labels, cfg) // eagerly checkpointed per round
-      feats.unpersist(blocking = false)
+      val w = graft.Pin.during(feats) {
+        train(feats, labels, cfg) // eagerly checkpointed per round
+      }
       w.coalesce(1).write.mode("overwrite").parquet(store)
     }
     spark.read.parquet(store)

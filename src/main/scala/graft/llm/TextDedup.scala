@@ -909,12 +909,10 @@ object TextDedup {
         least(col(aCol), col(bCol)).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count()
-    val labels =
-      if (nEdges <= driverEdgeLimit) driverUnionFind(pairs.sparkSession, edges)
+    val labels = graft.Pin.during(edges) {
+      if (edges.count() <= driverEdgeLimit) driverUnionFind(pairs.sparkSession, edges)
       else starContraction(edges)._1
-    edges.unpersist(blocking = false)
+    }
     labels.select(col("u").as("doc_id"), col("cluster_id"))
   }
 

@@ -246,7 +246,7 @@ object VectorSearch {
     * it), the probe side joins its tier's codes and is salted, the
     * (small, per-list) home side replicates across the salts, and the
     * scored candidates keep top-`m` per query before the exact
-    * rerank. One definition means a salting/persist-lifecycle fix
+    * rerank. One definition means a salting/pin-lifecycle fix
     * lands in every tier at once.
     *
     * Salting rationale: at test scale nlist (10 labels) is far below
@@ -274,55 +274,52 @@ object VectorSearch {
     // interpreted 64-step fold × |candidate pairs| (measured 3.9 s vs
     // 1.6 s for the sf0.1 candidate stage; quadratically worse with
     // corpus growth, since pairs outnumber rows by the list size).
-    val codesM = codes
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    codesM.count()
-    val codesA = codesM.select(col(idCol).as("va"), col(codeCol).as(aliasA))
-    val codesB = codesM.select(col(idCol).as("vb"), col(codeCol).as(aliasB))
+    val codesA = codes.select(col(idCol).as("va"), col(codeCol).as(aliasA))
+    val codesB = codes.select(col(idCol).as("vb"), col(codeCol).as(aliasB))
     val cents = ivfCodebook(df, vecCol, labelCol)
     val assign = assignToCents(df, idCol, vecCol, cents, nprobe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assign.count() // materialize once; probed + home both read it
     val salts = saltCount(df.sparkSession, cents.size)
-    val probed = assign.where(probeFilter)
-      .select(col(idCol).as("va"), col("list_id"))
-      .join(codesA, "va")
-      .withColumn("salt", pmod(hash(col("va")), lit(salts)))
-    val home = assign.where(col("rn") === 1 && homeFilter)
-      .select(col(idCol).as("vb"), col("list_id"))
-      .join(codesB, "vb")
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    // The candidate join EXPANDS ~list-size× past its inputs, which
-    // AQE cannot see: with byte-sized codes both inputs fall under the
-    // broadcast threshold and the pre-expansion stream coalesces to a
-    // handful of partitions — the 10⁷–10⁸-pair scan and the top-m
-    // aggregate then run nearly serially, defeating the salting
-    // entirely (measured at sf1: 40–55 s candidate stage for the
-    // 4-int PQ codes vs ~9 s fixed; the SQ8 tier only escaped because
-    // its 64-long codes exceed the broadcast threshold). The explicit
-    // numbered repartition pins the join's parallelism (AQE does not
-    // coalesce user-specified partition counts) and the shuffle-hash
-    // hint keeps the planner from converting the small build side
-    // back into a broadcast.
-    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = probed.repartition(nPart, col("list_id"), col("salt"))
-      .hint("shuffle_hash")
-      .join(home, Seq("list_id", "salt"))
-      .where(col("va") =!= col("vb"))
-      .withColumn("score", score)
-      .groupBy(col("va"))
-      .agg(expr(s"topk_neighbors(vb, score, $m)").as("top"))
-      .select(col("va"), explode(col("top")).as("n"))
-      .select(col("va"), col("n.vb").as("vb"))
-      // one eager materialization of the m-per-query id pairs — the
-      // narrowest point of the pipeline — after which the corpus-sized
-      // code and assignment caches are dropped HERE instead of pinning
-      // executor memory for the session (the PageRank.run lifecycle);
-      // the checkpointed pairs are reclaimed by the ContextCleaner once
-      // the caller drops the result
-      .localCheckpoint(true)
-    codesM.unpersist(blocking = false)
-    assign.unpersist(blocking = false)
+    val cand = graft.Pin.during(codes, assign) {
+      codes.count()
+      assign.count() // materialize once; probed + home both read it
+      val probed = assign.where(probeFilter)
+        .select(col(idCol).as("va"), col("list_id"))
+        .join(codesA, "va")
+        .withColumn("salt", pmod(hash(col("va")), lit(salts)))
+      val home = assign.where(col("rn") === 1 && homeFilter)
+        .select(col(idCol).as("vb"), col("list_id"))
+        .join(codesB, "vb")
+        .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
+      // The candidate join EXPANDS ~list-size× past its inputs, which
+      // AQE cannot see: with byte-sized codes both inputs fall under the
+      // broadcast threshold and the pre-expansion stream coalesces to a
+      // handful of partitions — the 10⁷–10⁸-pair scan and the top-m
+      // aggregate then run nearly serially, defeating the salting
+      // entirely (measured at sf1: 40–55 s candidate stage for the
+      // 4-int PQ codes vs ~9 s fixed; the SQ8 tier only escaped because
+      // its 64-long codes exceed the broadcast threshold). The explicit
+      // numbered repartition pins the join's parallelism (AQE does not
+      // coalesce user-specified partition counts) and the shuffle-hash
+      // hint keeps the planner from converting the small build side
+      // back into a broadcast.
+      val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
+      probed.repartition(nPart, col("list_id"), col("salt"))
+        .hint("shuffle_hash")
+        .join(home, Seq("list_id", "salt"))
+        .where(col("va") =!= col("vb"))
+        .withColumn("score", score)
+        .groupBy(col("va"))
+        .agg(expr(s"topk_neighbors(vb, score, $m)").as("top"))
+        .select(col("va"), explode(col("top")).as("n"))
+        .select(col("va"), col("n.vb").as("vb"))
+        // one eager materialization of the m-per-query id pairs — the
+        // narrowest point of the pipeline — after which the corpus-sized
+        // code and assignment pins are dropped HERE instead of holding
+        // executor memory for the session; the checkpointed pairs are
+        // reclaimed by the ContextCleaner once the caller drops the
+        // result
+        .localCheckpoint(true)
+    }
     exactRerank(df, idCol, vecCol, cand, k)
   }
 
@@ -1130,17 +1127,16 @@ object VectorSearch {
     // own action(s) over `history`, and without the pin each re-paid
     // the upstream scan (plus any load-time spread exchange) — guide
     // §2.4. Values are unchanged; only the recompute is removed.
-    val h = history.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      centroidDims(h, vecCol, labelCol)
+    graft.Pin.during(history) {
+      centroidDims(history, vecCol, labelCol)
         .select(col(labelCol).cast("long").as("list_id"), col("i"), col("c"))
         .write.mode("overwrite").parquet(s"$store/centroids")
-      val spark = h.sparkSession
+      val spark = history.sparkSession
       import spark.implicits._
-      sq8Stats(h, vecCol).toDF("i", "mn", "mx")
+      sq8Stats(history, vecCol).toDF("i", "mn", "mx")
         .write.mode("overwrite").parquet(s"$store/stats")
-      appendIvfSq8Batch(h, idCol, vecCol, store)
-    } finally h.unpersist(blocking = false)
+      appendIvfSq8Batch(history, idCol, vecCol, store)
+    }
   }
 
   /** Absorbs one new batch into the index: the batch is assigned to
@@ -1320,20 +1316,17 @@ object VectorSearch {
     * oracle-checkable.
     */
   def ivfSearch(df: DataFrame, idCol: String, vecCol: String,
-                labelCol: String, k: Int, nprobe: Int = 1): DataFrame = {
-    val (plan, caches) = ivfSearchPlan(df, idCol, vecCol, labelCol, k, nprobe)
-    val out = plan.localCheckpoint(true)
-    caches.foreach(_.unpersist(blocking = false))
-    out
-  }
+                labelCol: String, k: Int, nprobe: Int = 1): DataFrame =
+    ivfSearchPlan(df, idCol, vecCol, labelCol, k, nprobe)(_.localCheckpoint(true))
 
-  /** [[ivfSearch]]'s LAZY pipeline plus the caches it persists — split
-    * out so plan-audit tests can inspect the physical shape that the
-    * public entry point's eager checkpoint would otherwise hide.
-    * Callers of this form own the returned caches' lifecycle. */
-  private[graft] def ivfSearchPlan(df: DataFrame, idCol: String, vecCol: String,
-                                   labelCol: String, k: Int,
-                                   nprobe: Int): (DataFrame, Seq[DataFrame]) = {
+  /** [[ivfSearch]]'s LAZY pipeline, handed to `use` while the caches it
+    * reads are pinned — split out so plan-audit tests can inspect the
+    * physical shape that the public entry point's eager checkpoint
+    * would otherwise hide. A frame `use` returns must not read the
+    * pins lazily. */
+  private[graft] def ivfSearchPlan[T](df: DataFrame, idCol: String, vecCol: String,
+                                      labelCol: String, k: Int,
+                                      nprobe: Int)(use: DataFrame => T): T = {
     // Execution shape (the ivfCandidateRerank discipline, round 15):
     //  - the ASSIGNMENT (N×nprobe narrow rows) and the normed vectors
     //    are PERSISTED, not localCheckpoint'ed — persist keeps the
@@ -1364,32 +1357,34 @@ object VectorSearch {
     // cached partition once even when one job reads it from two sides
     val e = withNorm(df, vecCol)
       .select(col(idCol), col(vecCol), col(labelCol), col("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = ivfCodebook(e, vecCol, labelCol)
-    val assign = assignToCents(e, idCol, vecCol, cents, nprobe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val salts = saltCount(spark, cents.size)
-    val probed = assign.select(col(idCol).as("va"), col("list_id"))
-      .join(e.select(col(idCol).as("va"), col(vecCol).as("ea"),
-        col("nrm").as("na")), "va")
-      .withColumn("salt", pmod(hash(col("va")), lit(salts)))
-    val home = assign.where(col("rn") === 1)
-      .select(col(idCol).as("vb"), col("list_id"))
-      .join(e.select(col(idCol).as("vb"), col(vecCol).as("eb"),
-        col("nrm").as("nb")), "vb")
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val out = probed.repartition(nPart, col("list_id"), col("salt"))
-      .hint("shuffle_hash")
-      .join(home, Seq("list_id", "salt"))
-      .where(col("va") =!= col("vb"))
-      .withColumn("cos", expr(dot("ea", "eb")) / (col("na") * col("nb")))
-      .groupBy(col("va"))
-      .agg(expr(s"topk_neighbors(vb, cos, $k)").as("top"))
-      .select(col("va"), posexplode(col("top")).as(Seq("pos", "n")))
-      .select(col("va"), (col("pos") + 1).cast("int").as("rn"),
-        col("n.vb").as("nn"), col("n.cos").as("cos"))
-    (out, Seq(e, assign))
+    graft.Pin.during(e) {
+      val cents = ivfCodebook(e, vecCol, labelCol)
+      val assign = assignToCents(e, idCol, vecCol, cents, nprobe)
+      graft.Pin.during(assign) {
+        val salts = saltCount(spark, cents.size)
+        val probed = assign.select(col(idCol).as("va"), col("list_id"))
+          .join(e.select(col(idCol).as("va"), col(vecCol).as("ea"),
+            col("nrm").as("na")), "va")
+          .withColumn("salt", pmod(hash(col("va")), lit(salts)))
+        val home = assign.where(col("rn") === 1)
+          .select(col(idCol).as("vb"), col("list_id"))
+          .join(e.select(col(idCol).as("vb"), col(vecCol).as("eb"),
+            col("nrm").as("nb")), "vb")
+          .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
+        val nPart = spark.sessionState.conf.numShufflePartitions
+        val out = probed.repartition(nPart, col("list_id"), col("salt"))
+          .hint("shuffle_hash")
+          .join(home, Seq("list_id", "salt"))
+          .where(col("va") =!= col("vb"))
+          .withColumn("cos", expr(dot("ea", "eb")) / (col("na") * col("nb")))
+          .groupBy(col("va"))
+          .agg(expr(s"topk_neighbors(vb, cos, $k)").as("top"))
+          .select(col("va"), posexplode(col("top")).as(Seq("pos", "n")))
+          .select(col("va"), (col("pos") + 1).cast("int").as("rn"),
+            col("n.vb").as("nn"), col("n.cos").as("cos"))
+        use(out)
+      }
+    }
   }
 
   /** Per-label centroid drift between two embedding snapshots —

@@ -66,63 +66,63 @@ object Vocab {
     * byte tokens).
     */
   def bpeMerges(df: DataFrame, textCol: String, numMerges: Int,
-                sep: String = " "): DataFrame = {
-    val (merges, vocab) = bpeMergesWithVocab(df, textCol, numMerges, sep)
-    vocab.unpersist(blocking = false)
-    merges
-  }
+                sep: String = " "): DataFrame =
+    bpeMergesWithVocab(df, textCol, numMerges, sep)._1
 
   /** [[bpeMerges]] plus the fully-merged vocabulary the learner already
     * maintains internally: returns (merges, vocab) where vocab is
     * (sym, freq) — each distinct word's subwords space-joined with all
-    * learned merges applied, and its corpus frequency. The vocab is
-    * LEFT PERSISTED (it is the learner's own final-round cache) so
+    * learned merges applied, and its corpus frequency. The vocab is the
+    * learner's own final-round local checkpoint, so
     * [[bpeEncodeFromVocab]] reuses the one corpus word-count scan and
     * the incremental merge applications the learner already paid,
     * instead of re-deriving both per consumer (guide §2.4: the encode
     * path previously re-ran the corpus aggregate plus the full regex
-    * merge chain 2-3x). Callers that need only the merge table use
-    * [[bpeMerges]], which drops the pin.
+    * merge chain 2-3x). No cache outlives the call: each round's
+    * checkpoint is reclaimed by the ContextCleaner once unreferenced.
     */
   def bpeMergesWithVocab(df: DataFrame, textCol: String, numMerges: Int,
                          sep: String = " "): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     import spark.implicits._
-    var vocab = df.select(explode(split(col(textCol), sep)).as("word"))
+    val words = df.select(explode(split(col(textCol), sep)).as("word"))
       .where(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(concat_ws(" ", split(col("word"), "")).as("sym"), col("freq"))
-      .persist()
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    for (rank <- 1 to numMerges if !exhausted) {
-      val best = vocab
-        .select(col("freq"), split(col("sym"), " ").as("s"))
-        .where(size(col("s")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(s)-2), " +
-            "i -> struct(element_at(s, i+1) AS l, element_at(s, i+2) AS r))"))
-          .as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        merges += ((rank, l, r, cnt))
-        // token-level greedy leftmost application (see scaladoc);
-        // each round's vocab is re-persisted so round j never replays
-        // rounds 1..j-1 (or the corpus scan)
-        val next = vocab.withColumn("sym",
-            regexp_replace(col("sym"), lit(mergePattern(l, r)),
-              lit(java.util.regex.Matcher.quoteReplacement(s"$l$r"))))
-          .persist()
-        next.count()
-        vocab.unpersist(blocking = false)
-        vocab = next
+    // the corpus word count is pinned for the loop (round 1 reads it
+    // twice); every later round reads its predecessor's checkpoint
+    val vocab = graft.Pin.during(words) {
+      var vocab = words
+      var exhausted = false
+      for (rank <- 1 to numMerges if !exhausted) {
+        val best = vocab
+          .select(col("freq"), split(col("sym"), " ").as("s"))
+          .where(size(col("s")) >= 2)
+          .select(col("freq"), explode(expr(
+            "transform(sequence(0, size(s)-2), " +
+              "i -> struct(element_at(s, i+1) AS l, element_at(s, i+2) AS r))"))
+            .as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (l, r, cnt) = (best(0).getString(0), best(0).getString(1),
+            best(0).getLong(2))
+          merges += ((rank, l, r, cnt))
+          // token-level greedy leftmost application (see scaladoc);
+          // each round's vocab is checkpointed so round j never replays
+          // rounds 1..j-1 (or the corpus scan)
+          vocab = vocab.withColumn("sym",
+              regexp_replace(col("sym"), lit(mergePattern(l, r)),
+                lit(java.util.regex.Matcher.quoteReplacement(s"$l$r"))))
+            .localCheckpoint(true)
+        }
       }
+      // no merge learned: the pinned word count leaves as a checkpoint
+      if (vocab eq words) words.localCheckpoint(true) else vocab
     }
     (merges.toSeq.toDF("rank", "left", "right", "pair_cnt"), vocab)
   }
@@ -171,15 +171,21 @@ object Vocab {
     encodeFromWordSubs(df, idCol, textCol, wordSubs, sep)
   }
 
-  /** [[bpeEncode]] fed by [[bpeMergesWithVocab]]'s pinned merged
-    * vocabulary instead of the merge table: the word→subwords map is a
-    * projection of the (cached) vocab — `word` is the sym with its
+  /** [[bpeEncode]] fed by [[bpeMergesWithVocab]]'s checkpointed
+    * merged vocabulary instead of the merge table: the word→subwords
+    * map is a projection of the vocab — `word` is the sym with its
     * spaces removed, `subs` the sym split on spaces — so the corpus
     * word-count scan and the regex merge chain run ZERO more times
     * here (the legacy [[bpeEncode]] re-ran both once per consumer of
     * `wordSubs`). Values are identical by construction: the learner
     * applied the same `mergePattern` chain incrementally to the same
     * word-count table.
+    *
+    * PRECONDITIONS: `mergedVocab` was learned on the SAME corpus
+    * (`df`, `textCol`, `sep`) — a word the learner never saw is
+    * silently dropped (encode other text with [[bpeEncode]]); and no
+    * word contains a space, since `word` is rebuilt by deleting the
+    * spaces of `sym` (possible only when `sep` is not " ").
     */
   def bpeEncodeFromVocab(df: DataFrame, idCol: String, textCol: String,
                          mergedVocab: DataFrame, sep: String = " ",

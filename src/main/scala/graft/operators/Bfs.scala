@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Multi-source bounded-depth breadth-first search over an edge list —
   * the frontier-expansion primitive behind "customers-also-bought"
@@ -39,23 +38,23 @@ object Bfs {
   def minHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
     val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("hop", lit(0)).localCheckpoint(true)
-    var frontier = visited
-    var hop = 1
-    while (hop <= maxHops && !frontier.isEmpty) {
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("hop", lit(hop))
-        .localCheckpoint(true)
-      visited = visited.union(next).localCheckpoint(true)
-      frontier = next
-      hop += 1
+    graft.Pin.during(e) {
+      var visited = seeds.select(col("node")).distinct()
+        .withColumn("hop", lit(0)).localCheckpoint(true)
+      var frontier = visited
+      var hop = 1
+      while (hop <= maxHops && !frontier.isEmpty) {
+        val next = frontier
+          .join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited.select(col("node")), Seq("node"), "left_anti")
+          .withColumn("hop", lit(hop))
+          .localCheckpoint(true)
+        visited = visited.union(next).localCheckpoint(true)
+        frontier = next
+        hop += 1
+      }
+      visited
     }
-    e.unpersist(blocking = false)
-    visited
   }
 }

@@ -184,13 +184,13 @@ object CountMin {
       .map(_.getPath.getName)
       .collect { case s if s.startsWith("batch_") => s.stripPrefix("batch_").toLong }
     val merged = readMergedGrid(spark, store).coalesce(1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    merged.count() // pin the pre-swap read before the marker blocks replays
-    if (batchIds.nonEmpty) {
-      val hw = math.max(batchIds.max, highWater(spark, store).getOrElse(Long.MinValue))
-      writeHighWater(spark, store, hw)
+    graft.Pin.during(merged) {
+      merged.count() // pin the pre-swap read before the marker blocks replays
+      if (batchIds.nonEmpty) {
+        val hw = math.max(batchIds.max, highWater(spark, store).getOrElse(Long.MinValue))
+        writeHighWater(spark, store, hw)
+      }
+      graft.llm.TextDedup.compactSwap(spark, s"$store/grids", merged)
     }
-    graft.llm.TextDedup.compactSwap(spark, s"$store/grids", merged)
-    merged.unpersist()
   }
 }

@@ -48,8 +48,7 @@ object LabelPropagation {
     // persist it or the upstream edge derivation (a distinct over the
     // source fact table in q211) re-runs once per round
     val e = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Pin.during(e) {
       var labels = e.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
       for (_ <- 1 to iters) {
@@ -73,6 +72,6 @@ object LabelPropagation {
           .localCheckpoint()
       }
       labels
-    } finally e.unpersist(blocking = false)
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Fixed-iteration PageRank in exact integer arithmetic.
   *
@@ -29,7 +28,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object PageRank {
 
-  /** @param edges two columns `src`, `dst` (long node ids); multi-edges
+  /** The three static tables (edge plan, node set, degree-joined
+    * edges) are pinned while the fixpoint is computed, and the result
+    * is returned as an eager local checkpoint, so no cache outlives
+    * the call. Against leaving the pins filled by the caller's first
+    * action, measured at sf0.1 on 4 cores (`graft.Bench`, min of three
+    * min-of-3 invocations): q82 2.79 → 2.75 s, q140 2.89 → 3.68 s
+    * (q140's runs spread 3.7–5.1 s).
+    *
+    * @param edges two columns `src`, `dst` (long node ids); multi-edges
     *              should be `.distinct()`-ed by the caller if unwanted
     * @param iters number of synchronous iterations (≥ 0)
     * @param broadcastRanks when the node set fits in executor memory
@@ -38,36 +45,15 @@ object PageRank {
     *              small partial-agg shuffle per iteration instead of
     *              three edge-sized ones. Leave false for web-scale
     *              graphs, where ranks must stay partitioned.
-    * @param eagerCleanup lazy by default: the three intermediate caches
-    *              (edge plan, node set, degree-joined edges) fill on
-    *              the caller's first action and STAY CACHED — fastest
-    *              single-result path (everything runs in one job), and
-    *              repeated actions on the returned plan reuse them.
-    *              They are reclaimed by Spark's ContextCleaner once
-    *              unreferenced and GC'd; callers looping many
-    *              `run()`s in one long-lived session should either
-    *              pass `eagerCleanup = true` (compute + localCheckpoint
-    *              the fixpoint now, drop every intermediate cache
-    *              before returning — measured ~1.5× slower on the q82
-    *              graph from the extra materialization) or clear
-    *              `sparkContext.getPersistentRDDs` between calls, as
-    *              `graft.Bench.resetState` does.
     * @return one row per node: `node`, `rank` (scaled long)
     */
   def run(edges: DataFrame, iters: Int,
           scale: Long = 1000000000000L,
           dampNum: Long = 85, dampDen: Long = 100,
           broadcastRanks: Boolean = false,
-          eagerCleanup: Boolean = false,
           seeds: Option[DataFrame] = None): DataFrame = {
     val bc: DataFrame => DataFrame =
       if (broadcastRanks) org.apache.spark.sql.functions.broadcast else identity
-    // all three static tables persist: the caller's edge plan is often
-    // itself expensive (a distinct over a fact table) and feeds the
-    // node set, the degree join and the contrib joins; `nodes`
-    // re-enters the plan at every iteration's left join, `edgesDeg` at
-    // every contrib join
-    val edgesP = edges.persist(StorageLevel.MEMORY_AND_DISK)
     // personalized PageRank (Page et al. 1999 §6, "personalized"
     // teleport): restart mass lands only on the seed set instead of
     // uniformly — ranks then measure importance RELATIVE to the seeds
@@ -76,49 +62,46 @@ object PageRank {
     // seeds and 0 elsewhere — ranking-equivalent to the 1/|S|
     // normalization, exactly representable, and identical to uniform
     // PageRank when every node seeds.
-    val allNodes = edgesP.select(col("src").as("node"))
-      .union(edgesP.select(col("dst").as("node")))
+    val allNodes = edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node")))
       .distinct()
-    val nodes = (seeds match {
+    val nodes = seeds match {
       case Some(s) => allNodes.join(
           s.select(col("node")).distinct().withColumn("__seed", lit(true)),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed"))
       case None => allNodes.withColumn("__seed", lit(true))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    }
     // out-degree as a window count: one shuffle on src, versus the
     // groupBy+join formulation's two passes over the edge list
-    val edgesDeg = edgesP
+    val edgesDeg = edges
       .withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = scale / dampDen * (dampDen - dampNum)
-    var ranks = nodes.select(col("node"),
-      when(col("__seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = edgesDeg
-        .join(bc(ranks), edgesDeg("src") === ranks("node"))
-        .select(col("dst"), expr("rank div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = nodes
-        .join(bc(contrib), nodes("node") === contrib("dst"), "left")
-        .select(col("node"),
-          (when(col("__seed"), lit(base)).otherwise(lit(0L))
-            + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("rank"))
-    }
-    if (!eagerCleanup) ranks
-    else {
-      // one eager materialization: the checkpoint job fills and
-      // consumes all three caches (edge plan → nodes/degrees →
-      // iterations), after which every intermediate cache is dropped
-      // here instead of waiting on the caller's GC; the checkpointed
-      // fixpoint itself is reclaimed by the ContextCleaner once the
-      // caller drops the reference
-      val out = ranks.localCheckpoint(true)
-      edgesP.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      edgesDeg.unpersist(blocking = false)
-      out
+    // all three static tables are pinned: the caller's edge plan is
+    // often itself expensive (a distinct over a fact table) and feeds
+    // the node set, the degree join and the contrib joins; `nodes`
+    // re-enters the plan at every iteration's left join, `edgesDeg` at
+    // every contrib join
+    graft.Pin.during(edges, nodes, edgesDeg) {
+      val base = scale / dampDen * (dampDen - dampNum)
+      var ranks = nodes.select(col("node"),
+        when(col("__seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
+      for (_ <- 1 to iters) {
+        val contrib = edgesDeg
+          .join(bc(ranks), edgesDeg("src") === ranks("node"))
+          .select(col("dst"), expr("rank div outdeg").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+        ranks = nodes
+          .join(bc(contrib), nodes("node") === contrib("dst"), "left")
+          .select(col("node"),
+            (when(col("__seed"), lit(base)).otherwise(lit(0L))
+              + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("rank"))
+      }
+      // one eager materialization fills and consumes all three pins
+      // (edge plan → nodes/degrees → iterations); the checkpointed
+      // fixpoint is reclaimed by the ContextCleaner once the caller
+      // drops the reference
+      ranks.localCheckpoint(true)
     }
   }
 }

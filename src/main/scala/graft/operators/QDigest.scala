@@ -168,14 +168,14 @@ object QDigest {
       .map(_.getPath.getName)
       .collect { case s if s.startsWith("batch_") => s.stripPrefix("batch_").toLong }
     val merged = readMergedHist(spark, store, grpCols).coalesce(1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    merged.count() // pin the pre-swap read before the marker blocks replays
-    if (batchIds.nonEmpty) {
-      val hw = math.max(batchIds.max, highWater(spark, store).getOrElse(Long.MinValue))
-      writeHighWater(spark, store, hw)
+    graft.Pin.during(merged) {
+      merged.count() // pin the pre-swap read before the marker blocks replays
+      if (batchIds.nonEmpty) {
+        val hw = math.max(batchIds.max, highWater(spark, store).getOrElse(Long.MinValue))
+        writeHighWater(spark, store, hw)
+      }
+      graft.llm.TextDedup.compactSwap(spark, s"$store/hists", merged)
     }
-    graft.llm.TextDedup.compactSwap(spark, s"$store/hists", merged)
-    merged.unpersist()
   }
 
   /** Digest of a merged leaf histogram: each (grpCols*, idx, cnt) row

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *   s6 near-dup prune         [[graft.llm.TextDedup.minHashLshPairs]]
   *   s7 SemDeDup               [[graft.llm.VectorSearch.semDedup]]
   *   s8 DSIR selection         (importance-resampling top-k, q172)
-  *   s9 tokenize and pack      [[graft.llm.Vocab.bpeEncode]] →
+  *   s9 tokenize and pack      [[graft.llm.Vocab.bpeMergesWithVocab]] →
+  *                             [[graft.llm.Vocab.bpeEncodeFromVocab]] →
   *                             [[graft.llm.Packer.packCounts]]
   *
   * v1 (q126) chained four stages; v2 adds the round-8/9 operators so
@@ -69,11 +70,12 @@ object Capstone {
 
   // ------------------------------------------------------- Spark side
 
-  /** Stupid-Backoff reject list over `corpus` (doc_id, lang, text):
-    * the q173 scoring pipeline parameterized by its input — train
+  /** Stupid-Backoff LM filter over `corpus` (doc_id, lang, text): the
+    * q173 scoring pipeline parameterized by its input — train
     * bigram/unigram counts on the `lang='en'` slice, score every doc
-    * with transitions, return the `n` worst (score asc, id asc). */
-  private def lmRejects(corpus: DataFrame, n: Int): DataFrame = {
+    * with transitions, and checkpoint all but the `n` worst (score asc,
+    * id asc). */
+  private def lmFilter(corpus: DataFrame, n: Int): DataFrame = {
     val toks = corpus.select(col("doc_id"), col("lang"),
       split(col("text"), " ").as("s"))
     // trans feeds the bigram counts AND the scoring spine; uni enters
@@ -85,39 +87,40 @@ object Capstone {
         "zip_with(slice(s, 1, size(s) - 1), slice(s, 2, size(s) - 1), " +
           "(a, b) -> struct(a AS v, b AS w))")).as("p"))
       .select(col("doc_id"), col("lang"), col("p.v"), col("p.w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val uni = toks.where(col("lang") === "en")
       .select(explode(col("s")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val big = trans.where(col("lang") === "en")
-      .groupBy(col("v"), col("w")).agg(count(lit(1)).as("cb"))
-    val tot = uni.agg(sum(col("cw")).as("nn"))
-    trans
-      .join(big, Seq("v", "w"), "left")
-      .join(uni.withColumnRenamed("w", "v").withColumnRenamed("cw", "cv"),
-        Seq("v"), "left")
-      .join(uni, Seq("w"), "left")
-      .na.fill(0L, Seq("cb", "cv", "cw"))
-      .crossJoin(broadcast(tot))
-      .withColumn("ls", round(log(
-        when(col("cb") > 0, col("cb").cast("double") / col("cv").cast("double"))
-          .when(col("cw") > 0,
-            lit(0.4) * col("cw").cast("double") / col("nn").cast("double"))
-          .otherwise(lit(0.4) * lit(0.4) / col("nn").cast("double"))), 9)
-        .cast("decimal(27,9)"))
-      .groupBy(col("doc_id"))
-      .agg((sum(col("ls")).cast("double") / count(lit(1))).as("avg_logscore"))
-      .orderBy(col("avg_logscore").asc, col("doc_id"))
-      .limit(n)
-      .select(col("doc_id"))
+    graft.Pin.during(trans, uni) {
+      val big = trans.where(col("lang") === "en")
+        .groupBy(col("v"), col("w")).agg(count(lit(1)).as("cb"))
+      val tot = uni.agg(sum(col("cw")).as("nn"))
+      val rejects = trans
+        .join(big, Seq("v", "w"), "left")
+        .join(uni.withColumnRenamed("w", "v").withColumnRenamed("cw", "cv"),
+          Seq("v"), "left")
+        .join(uni, Seq("w"), "left")
+        .na.fill(0L, Seq("cb", "cv", "cw"))
+        .crossJoin(broadcast(tot))
+        .withColumn("ls", round(log(
+          when(col("cb") > 0, col("cb").cast("double") / col("cv").cast("double"))
+            .when(col("cw") > 0,
+              lit(0.4) * col("cw").cast("double") / col("nn").cast("double"))
+            .otherwise(lit(0.4) * lit(0.4) / col("nn").cast("double"))), 9)
+          .cast("decimal(27,9)"))
+        .groupBy(col("doc_id"))
+        .agg((sum(col("ls")).cast("double") / count(lit(1))).as("avg_logscore"))
+        .orderBy(col("avg_logscore").asc, col("doc_id"))
+        .limit(n)
+        .select(col("doc_id"))
+      corpus.join(rejects, Seq("doc_id"), "left_anti").localCheckpoint(true)
+    }
   }
 
   /** DSIR top-`n` selection over `corpus` (doc_id, lang, text): the
     * q172 pipeline parameterized by its input — hashed-bigram
     * Naive-Bayes log importance weight toward the `lang='en'` target
-    * slice, deterministic top-k (weight desc, id asc). */
-  private def dsirTop(corpus: DataFrame, n: Int): DataFrame = {
+    * slice, checkpointed deterministic top-k (weight desc, id asc). */
+  private def dsirSelect(corpus: DataFrame, n: Int): DataFrame = {
     val bg = corpus.select(col("doc_id"), col("lang"),
         split(col("text"), " ").as("s"))
       .where(size(col("s")) >= 2)
@@ -126,31 +129,33 @@ object Capstone {
           "(a, b) -> concat(a, ' ', b))")).as("g"))
       .select(col("doc_id"), col("lang"),
         (GraftFunctions.polyHash("g") % DsirBuckets).as("b"))
-      // three consumers (raw, tgt, per-doc counts) — pin the hashed
-      // bigram stream once instead of re-tokenizing per consumer
-      // (§2.4); reduced to (doc_id, lang, bucket), no text
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val raw = bg.groupBy(col("b")).agg(count(lit(1)).as("r"))
-    val tgt = bg.where(col("lang") === "en")
-      .groupBy(col("b")).agg(count(lit(1)).as("t"))
-    val buckets = raw.join(tgt, Seq("b"), "left").na.fill(0L, Seq("t"))
-    val tot = buckets.agg(sum(col("r")).as("rr"), sum(col("t")).as("tt"))
-    val lam = buckets.crossJoin(broadcast(tot))
-      .withColumn("lam",
-        round(log(((col("t") + 1) * (col("rr") + DsirBuckets)).cast("double") /
-          ((col("r") + 1) * (col("tt") + DsirBuckets)).cast("double")), 9)
-          .cast("decimal(27,9)"))
-      .select(col("b"), col("lam"))
-    bg.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("n"))
-      .join(broadcast(lam), "b")
-      .groupBy(col("doc_id"))
-      // decimal(10,0) × decimal(27,9) stays exact at 38 digits —
-      // q172's documented overflow-vs-scale trade
-      .agg(sum(col("n").cast("decimal(10,0)") * col("lam"))
-        .cast("double").as("logw"))
-      .orderBy(col("logw").desc, col("doc_id"))
-      .limit(n)
-      .select(col("doc_id"))
+    // three consumers (raw, tgt, per-doc counts) — pin the hashed
+    // bigram stream once instead of re-tokenizing per consumer (§2.4);
+    // reduced to (doc_id, lang, bucket), no text
+    graft.Pin.during(bg) {
+      val raw = bg.groupBy(col("b")).agg(count(lit(1)).as("r"))
+      val tgt = bg.where(col("lang") === "en")
+        .groupBy(col("b")).agg(count(lit(1)).as("t"))
+      val buckets = raw.join(tgt, Seq("b"), "left").na.fill(0L, Seq("t"))
+      val tot = buckets.agg(sum(col("r")).as("rr"), sum(col("t")).as("tt"))
+      val lam = buckets.crossJoin(broadcast(tot))
+        .withColumn("lam",
+          round(log(((col("t") + 1) * (col("rr") + DsirBuckets)).cast("double") /
+            ((col("r") + 1) * (col("tt") + DsirBuckets)).cast("double")), 9)
+            .cast("decimal(27,9)"))
+        .select(col("b"), col("lam"))
+      val top = bg.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("n"))
+        .join(broadcast(lam), "b")
+        .groupBy(col("doc_id"))
+        // decimal(10,0) × decimal(27,9) stays exact at 38 digits —
+        // q172's documented overflow-vs-scale trade
+        .agg(sum(col("n").cast("decimal(10,0)") * col("lam"))
+          .cast("double").as("logw"))
+        .orderBy(col("logw").desc, col("doc_id"))
+        .limit(n)
+        .select(col("doc_id"))
+      corpus.join(top, "doc_id").localCheckpoint(true)
+    }
   }
 
   /** One stage-summary row: n_docs, sum_doc_ids, whitespace-token
@@ -169,92 +174,93 @@ object Capstone {
     // the bench slice — pin it so the scan + spread-repartition run
     // once (§2.4)
     val d = docs(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Stage boundaries are EAGERLY pinned (localCheckpoint(true)):
-    // several downstream operators run driver-side iterations with
-    // their own actions (k-means passes, BPE merge rounds, the
-    // stage-stat union's nine branches), and without lineage
-    // truncation every such action would re-execute the whole chain
-    // prefix — at 100 TB the pins become persisted stage tables,
-    // which is how a production pipeline stages anyway.
-    // s1: exact dedup, min-id survivors
-    val s1 = d.select(col("doc_id"), col("lang"), col("source"), col("text"))
-      .join(graft.llm.TextDedup.exactDuplicates(d, "doc_id", "text")
-        .where(col("kept")).select("doc_id"), "doc_id")
-      .localCheckpoint(true)
-    // s2: repeated-span scrub on the deduped corpus; text := clean_text
-    val s2 = s1.drop("text")
-      .join(graft.llm.TextDedup.scrubSpans(s1, "doc_id", "text", minTokens = 15)
-        .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
-      .localCheckpoint(true)
-    // s3: quality floor on the scrubbed text
-    val s3 = graft.llm.TextStats
-      .withQualityScore(s2, "text", Seq("a", "the"))
-      .where(col("score") >= 0.5).drop("score")
-      .localCheckpoint(true)
-    // s4: Stupid-Backoff LM filter — reject the 100 worst
-    val s4 = s3.join(lmRejects(s3, LmRejectK), Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // s5: decontamination — bench arrives RAW from outside the pipe
-    val bench = d.where(col("doc_id") % 97 === 0)
-    val corpus = s4.where(col("doc_id") % 97 =!= 0)
-    val contaminated = graft.llm.TextDedup
-      .contaminationOverlap(corpus, bench, "doc_id", "text", n = 3)
-      .select("doc_id").distinct()
-    val s5 = corpus.join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // s6: near-dup prune (q126's non-transitive pair rule)
-    val removed = graft.llm.TextDedup
-      .minHashLshPairs(s5, "doc_id", "text", n = 3, k = 12, bands = 4)
-      .where(col("jac") >= 0.6)
-      .select(col("d2").as("doc_id")).distinct()
-    val s6 = s5.join(removed, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // s7: SemDeDup on the SURVIVORS' embeddings (doc_id = vec_id)
-    val e = Tables.load(spark, sfDir, "embeddings")
-    val sem = graft.llm.VectorSearch.semDedup(
-      e.join(s6.select(col("doc_id").as("vec_id")), "vec_id")
-        .localCheckpoint(true),
-      "vec_id", "embedding", k = 8, passes = 2, minCos = 0.4)
-    val s7 = s6.join(sem.where(col("kept"))
-      .select(col("vec_id").as("doc_id")), "doc_id")
-      .localCheckpoint(true)
-    // s8: DSIR selection — top 100 toward the en target
-    val s8 = s7.join(dsirTop(s7, DsirKeepK), "doc_id")
-      .localCheckpoint(true)
-    // s9: tokenizer fit + encode + pack on the final selection —
-    // encode from the learner's pinned merged vocab, and pin the
-    // twice-consumed per-doc counts (q128's shape, §2.4)
-    val (_, vocabS9) = graft.llm.Vocab.bpeMergesWithVocab(s8, "text", numMerges = 4)
-    val counts = graft.llm.Vocab.bpeEncodeFromVocab(s8, "doc_id", "text", vocabS9)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_subwords"),
-        sum(col("subword_id").cast("long")).as("id_sum"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pack = graft.llm.Packer
-      .packCounts(counts, "doc_id", "n_subwords", capacity = 256, buckets = 8)
-      .join(counts, "doc_id")
-      .groupBy(col("bucket"), col("batch"))
-      .agg(count(lit(1)).as("nd"),
-        sum(col("n_tokens").cast("long")).as("sum_subwords"),
-        sum(col("id_sum")).as("sum_ids"))
-    val packStat = pack.agg(count(lit(1)).as("n_docs"),
-        sum(col("nd")).as("sum_doc_ids"),
-        sum(col("sum_subwords")).as("sum_tokens"),
-        sum(col("sum_ids")).as("checksum"))
-      .withColumn("stage", lit("s9_pack"))
-      .select(col("stage"), col("n_docs"), col("sum_doc_ids"),
-        col("sum_tokens"), col("checksum"))
-    stat("s1_exact", s1)
-      .unionByName(stat("s2_scrub", s2))
-      .unionByName(stat("s3_quality", s3))
-      .unionByName(stat("s4_lmfilter", s4))
-      .unionByName(stat("s5_decontam", s5))
-      .unionByName(stat("s6_neardup", s6))
-      .unionByName(stat("s7_semdedup", s7))
-      .unionByName(stat("s8_dsir", s8))
-      .unionByName(packStat)
-      .orderBy(col("stage"))
+    graft.Pin.during(d) {
+      // Stage boundaries are EAGERLY pinned (localCheckpoint(true)):
+      // several downstream operators run driver-side iterations with
+      // their own actions (k-means passes, BPE merge rounds, the
+      // stage-stat union's nine branches), and without lineage
+      // truncation every such action would re-execute the whole chain
+      // prefix — at 100 TB the pins become persisted stage tables,
+      // which is how a production pipeline stages anyway.
+      // s1: exact dedup, min-id survivors
+      val s1 = d.select(col("doc_id"), col("lang"), col("source"), col("text"))
+        .join(graft.llm.TextDedup.exactDuplicates(d, "doc_id", "text")
+          .where(col("kept")).select("doc_id"), "doc_id")
+        .localCheckpoint(true)
+      // s2: repeated-span scrub on the deduped corpus; text := clean_text
+      val s2 = s1.drop("text")
+        .join(graft.llm.TextDedup.scrubSpans(s1, "doc_id", "text", minTokens = 15)
+          .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
+        .localCheckpoint(true)
+      // s3: quality floor on the scrubbed text
+      val s3 = graft.llm.TextStats
+        .withQualityScore(s2, "text", Seq("a", "the"))
+        .where(col("score") >= 0.5).drop("score")
+        .localCheckpoint(true)
+      // s4: Stupid-Backoff LM filter — reject the 100 worst
+      val s4 = lmFilter(s3, LmRejectK)
+      // s5: decontamination — bench arrives RAW from outside the pipe
+      val bench = d.where(col("doc_id") % 97 === 0)
+      val corpus = s4.where(col("doc_id") % 97 =!= 0)
+      val contaminated = graft.llm.TextDedup
+        .contaminationOverlap(corpus, bench, "doc_id", "text", n = 3)
+        .select("doc_id").distinct()
+      val s5 = corpus.join(contaminated, Seq("doc_id"), "left_anti")
+        .localCheckpoint(true)
+      // s6: near-dup prune (q126's non-transitive pair rule)
+      val removed = graft.llm.TextDedup
+        .minHashLshPairs(s5, "doc_id", "text", n = 3, k = 12, bands = 4)
+        .where(col("jac") >= 0.6)
+        .select(col("d2").as("doc_id")).distinct()
+      val s6 = s5.join(removed, Seq("doc_id"), "left_anti")
+        .localCheckpoint(true)
+      // s7: SemDeDup on the SURVIVORS' embeddings (doc_id = vec_id)
+      val e = Tables.load(spark, sfDir, "embeddings")
+      val sem = graft.llm.VectorSearch.semDedup(
+        e.join(s6.select(col("doc_id").as("vec_id")), "vec_id")
+          .localCheckpoint(true),
+        "vec_id", "embedding", k = 8, passes = 2, minCos = 0.4)
+      val s7 = s6.join(sem.where(col("kept"))
+        .select(col("vec_id").as("doc_id")), "doc_id")
+        .localCheckpoint(true)
+      // s8: DSIR selection — top 100 toward the en target
+      val s8 = dsirSelect(s7, DsirKeepK)
+      // s9: tokenizer fit + encode + pack on the final selection —
+      // encode from the learner's merged vocab, and pin the
+      // twice-consumed per-doc counts (q128's shape, §2.4)
+      val (_, vocabS9) = graft.llm.Vocab.bpeMergesWithVocab(s8, "text", numMerges = 4)
+      val counts = graft.llm.Vocab.bpeEncodeFromVocab(s8, "doc_id", "text", vocabS9)
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_subwords"),
+          sum(col("subword_id").cast("long")).as("id_sum"))
+      graft.Pin.during(counts) {
+        val pack = graft.llm.Packer
+          .packCounts(counts, "doc_id", "n_subwords", capacity = 256, buckets = 8)
+          .join(counts, "doc_id")
+          .groupBy(col("bucket"), col("batch"))
+          .agg(count(lit(1)).as("nd"),
+            sum(col("n_tokens").cast("long")).as("sum_subwords"),
+            sum(col("id_sum")).as("sum_ids"))
+        val packStat = pack.agg(count(lit(1)).as("n_docs"),
+            sum(col("nd")).as("sum_doc_ids"),
+            sum(col("sum_subwords")).as("sum_tokens"),
+            sum(col("sum_ids")).as("checksum"))
+          .withColumn("stage", lit("s9_pack"))
+          .select(col("stage"), col("n_docs"), col("sum_doc_ids"),
+            col("sum_tokens"), col("checksum"))
+        stat("s1_exact", s1)
+          .unionByName(stat("s2_scrub", s2))
+          .unionByName(stat("s3_quality", s3))
+          .unionByName(stat("s4_lmfilter", s4))
+          .unionByName(stat("s5_decontam", s5))
+          .unionByName(stat("s6_neardup", s6))
+          .unionByName(stat("s7_semdedup", s7))
+          .unionByName(stat("s8_dsir", s8))
+          .unionByName(packStat)
+          .orderBy(col("stage"))
+          .localCheckpoint(true)
+      }
+    }
   }
 
   // ------------------------------------------------------ oracle side

@@ -101,7 +101,7 @@ object CatalogQuery {
     "LOCATION 'file:$DATA/upper_part';",
     "",
     "!sh echo \"adding partitions: graft_cat.upper_part...\";",
-    "ALTER TABLE upper_part ADD PARTITION (k='Beta') LOCATION \"file:$DATA/upper_part/k=Beta\";"
+    "ALTER TABLE upper_part ADD PARTITION (k='Beta') LOCATION \"k=Beta\";"
   )
 
   val registry: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(

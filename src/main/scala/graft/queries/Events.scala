@@ -1150,9 +1150,10 @@ object Events {
     // re-scanned + re-spread the events table; pin the 2-column
     // projection once (§2.4)
     val e = ev(spark, sfDir).select(col("user_id"), to_date(col("ts")).as("day"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val grid = CountMin.merge(CountMin.sketch(e, "user_id", d, w, Seq("day")))
-    cmsReport(e, grid, d, w)
+    graft.Pin.during(e) {
+      val grid = CountMin.merge(CountMin.sketch(e, "user_id", d, w, Seq("day")))
+      cmsReport(e, grid, d, w).localCheckpoint(true)
+    }
   }
 
   val q194Sql: String = {

@@ -811,15 +811,17 @@ object Text {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_subwords"),
         sum(col("subword_id").cast("long")).as("id_sum"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.llm.Packer
-      .packCounts(counts, "doc_id", "n_subwords", capacity = 256, buckets = 8)
-      .join(counts, "doc_id")
-      .groupBy(col("bucket"), col("batch"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens").cast("long")).as("sum_subwords"),
-        sum(col("id_sum")).as("sum_subword_ids"))
-      .orderBy(col("bucket"), col("batch"))
+    graft.Pin.during(counts) {
+      graft.llm.Packer
+        .packCounts(counts, "doc_id", "n_subwords", capacity = 256, buckets = 8)
+        .join(counts, "doc_id")
+        .groupBy(col("bucket"), col("batch"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens").cast("long")).as("sum_subwords"),
+          sum(col("id_sum")).as("sum_subword_ids"))
+        .orderBy(col("bucket"), col("batch"))
+        .localCheckpoint(true)
+    }
   }
 
   val q128Sql: String =

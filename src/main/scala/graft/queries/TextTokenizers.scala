@@ -91,7 +91,7 @@ object TextTokenizers {
     */
   def q120(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    // encode from the learner's own pinned merged vocabulary — the
+    // encode from the learner's own checkpointed merged vocabulary — the
     // corpus word-count scan and the regex merge chain run once, in
     // the learner, instead of once more per wordSubs consumer (§2.4)
     val (_, vocab) = graft.llm.Vocab.bpeMergesWithVocab(d, "text", numMerges = 4)

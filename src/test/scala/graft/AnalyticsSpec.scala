@@ -45,14 +45,13 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got(1L) > got(2L) && got(2L) == got(3L))
   }
 
-  test("PageRank eagerCleanup returns identical ranks and drops the intermediate caches") {
+  test("PageRank returns identical ranks and drops the intermediate caches") {
     val s = spark
     import s.implicits._
     val edges = Seq((1L, 2L), (2L, 1L), (3L, 1L), (1L, 3L))
     val before = s.sparkContext.getPersistentRDDs.keySet
     val got = graft.operators.PageRank
-      .run(edges.toDF("src", "dst"), iters = 4, scale = 1000000L,
-        eagerCleanup = true)
+      .run(edges.toDF("src", "dst"), iters = 4, scale = 1000000L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == refPageRank(edges, 4, 1000000L))
     // the three MEMORY_AND_DISK intermediates must be unpersisted; only

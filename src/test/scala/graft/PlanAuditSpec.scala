@@ -117,10 +117,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // join broadcasts" assert is obsolete: since round 14 the centroid
     // codebook enters as fold-in literals, not a join.
     val e = Tables.load(spark, sfDir, "embeddings")
-    val (plan, caches) = graft.llm.VectorSearch
-      .ivfSearchPlan(e, "vec_id", "embedding", "label", k = 3, nprobe = 2)
-    val p = plan.queryExecution.executedPlan.toString
-    caches.foreach(_.unpersist(blocking = false))
+    val p = graft.llm.VectorSearch
+      .ivfSearchPlan(e, "vec_id", "embedding", "label", k = 3, nprobe = 2)(
+        _.queryExecution.executedPlan.toString)
     assert(p.contains("ShuffledHashJoin"),
       "expected the salted expansion join to be a ShuffledHashJoin")
     assert(!p.contains("SortMergeJoin"),

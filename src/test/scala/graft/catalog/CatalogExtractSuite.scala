@@ -325,4 +325,42 @@ class CatalogExtractSuite extends AnyFunSuite with BeforeAndAfterAll {
       .listPartitions(TableIdentifier("upper_part", Some("rtdb2"))).map(_.spec)
     assert(parts.map(_("k")).sorted == Seq("Beta", "alpha"))
   }
+
+  test("round-trip: quoted column names and escaped partition paths keep specs and locations") {
+    // column names the parser needs backticks for (a backtick, `-`, `;`),
+    // a partition column with a space, and partition values whose
+    // directory names Hive escapes (`'`, `%`) or that hold a space, a `;`
+    // or an uppercase letter (which forces ADD PARTITION under the MSCK
+    // default). Names are ASCII: the metastore rejects non-ASCII paths
+    // under an ASCII `sun.jnu.encoding`.
+    spark.sql("CREATE DATABASE IF NOT EXISTS hostiledb")
+    spark.sql(s"""CREATE TABLE hostiledb.odd_part
+                 |(`a``b` INT, `c-d` STRING, `e;f` DOUBLE, `part col` STRING)
+                 |USING parquet PARTITIONED BY (`part col`)
+                 |LOCATION '$dataDir/odd_part'""".stripMargin)
+    val values = Seq("it's", "50%", "sp ace", "a;b", "Mixed")
+    values.zipWithIndex.foreach { case (v, i) =>
+      spark.sql(s"INSERT INTO hostiledb.odd_part PARTITION (`part col`='${v.replace("'", "\\'")}') " +
+        s"VALUES ($i, 'x', 1.0)")
+    }
+    def parts(db: String) = spark.sessionState.catalog
+      .listPartitions(TableIdentifier("odd_part", Some(db)))
+      .map(p => p.spec -> p.location).sortBy(_._1.toString)
+    val orig = parts("hostiledb")
+    assert(orig.map(_._1("part col")).sorted == values.sorted)
+
+    for ((cfg, target) <- Seq(ctxAdd -> "hostile_ctxadd", qualAdd -> "hostile_qualadd",
+                              ctx -> "hostile_msck")) {
+      val script = DdlExtract.extract(spark, "hostiledb", "odd_part", cfg).script
+      assert(script.contains("ADD PARTITION (`part col`="), script)
+      spark.sql(s"DROP DATABASE IF EXISTS $target CASCADE")
+      ScriptReplay.replay(spark, script.replace("hostiledb", target))
+      val replayed = spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier("odd_part", Some(target)))
+      assert(replayed.schema == spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier("odd_part", Some("hostiledb"))).schema)
+      assert(parts(target) == orig, s"partition specs or locations differ after replay ($target)")
+      assert(spark.table(s"$target.odd_part").count() == values.size)
+    }
+  }
 }
