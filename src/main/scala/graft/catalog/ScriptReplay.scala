@@ -9,19 +9,42 @@ import org.apache.spark.sql.SparkSession
   * non-SQL).
   *
   * Statement boundaries are `;` at end of line — the exact shape
-  * [[ScriptWriter]] emits (a literal `;` followed by a newline inside a
-  * quoted value would mis-split; the writer never produces one on its
-  * own lines).
+  * [[ScriptWriter]] emits — outside any `'…'`, `"…"` or `` `…` ``
+  * quote, so a quoted comment or property value holding `;` + newline,
+  * or a line that starts `--`, stays inside its statement.
   */
 object ScriptReplay {
 
-  def statements(script: String): Seq[String] =
-    script.linesIterator
-      .filterNot(_.trim.startsWith("--"))
-      .filterNot(_.trim.startsWith("!"))
-      .mkString("\n")
-      .split(";\\s*(\n|$)")
-      .map(_.trim).filter(_.nonEmpty).toSeq
+  def statements(script: String): Seq[String] = {
+    val stmts = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var open = 0.toChar // the quote a value is open in, 0 outside one
+    for (line <- script.linesIterator) {
+      val t = line.trim
+      if (open != 0 || !(t.startsWith("--") || t.startsWith("!"))) {
+        var escaped = false
+        line.foreach { c =>
+          if (escaped) escaped = false
+          else if (open != 0) {
+            if (c == '\\' && open != '`') escaped = true
+            else if (c == open) open = 0
+          } else if (c == '\'' || c == '"' || c == '`') open = c
+        }
+        if (open == 0 && t.endsWith(";")) {
+          cur ++= line.substring(0, line.lastIndexOf(';'))
+          val stmt = cur.toString.trim
+          if (stmt.nonEmpty) stmts += stmt
+          cur.clear()
+        } else {
+          cur ++= line
+          cur += '\n'
+        }
+      }
+    }
+    val rest = cur.toString.trim
+    if (rest.nonEmpty) stmts += rest
+    stmts.result()
+  }
 
   /** Execute every statement in order; returns the statement count. */
   def replay(spark: SparkSession, script: String): Int = {

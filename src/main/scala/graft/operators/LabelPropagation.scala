@@ -24,7 +24,11 @@ import org.apache.spark.sql.functions._
   * count, and a node-partitioned window argmax — all keyed on node
   * ids, no driver state, intermediate sizes bounded by |E| and |V|.
   * Rounds are a declared constant, so the lineage depth is fixed and
-  * no convergence test (a driver-side global) is needed.
+  * no convergence test (a driver-side global) is needed. The edge
+  * table is coalesced to its data size ([[graft.Pin.fit]]) before it
+  * is pinned, so every round's scan of it runs one task per ~1 MB of
+  * edges (at most one per core) instead of one per partition its
+  * derivation happened to produce.
   */
 object LabelPropagation {
 
@@ -47,7 +51,7 @@ object LabelPropagation {
     // round's vote join (each round is its own checkpoint action) —
     // persist it or the upstream edge derivation (a distinct over the
     // source fact table in q211) re-runs once per round
-    val e = edges.select(col("src"), col("dst"))
+    val e = graft.Pin.fit(edges.select(col("src"), col("dst")))
     graft.Pin.during(e) {
       var labels = e.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))

@@ -18,18 +18,36 @@ class AnalyticsSpec extends AnyFunSuite {
     * loop over an adjacency map.
     */
   private def refPageRank(edges: Seq[(Long, Long)], iters: Int,
-                          scale: Long, num: Long = 85, den: Long = 100): Map[Long, Long] = {
+                          scale: Long, num: Long = 85, den: Long = 100,
+                          seeds: Option[Set[Long]] = None): Map[Long, Long] = {
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val outdeg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    val seeded = seeds.getOrElse(nodes.toSet)
     val base = scale / den * (den - num)
-    var rank = nodes.map(_ -> scale).toMap
+    var rank = nodes.map(n => n -> (if (seeded(n)) scale else 0L)).toMap
     for (_ <- 1 to iters) {
       val contrib = edges
         .groupBy(_._2).view
         .mapValues(_.map { case (s, _) => rank(s) / outdeg(s) }.sum).toMap
-      rank = nodes.map(n => n -> (base + num * contrib.getOrElse(n, 0L) / den)).toMap
+      rank = nodes.map(n => n ->
+        ((if (seeded(n)) base else 0L) + num * contrib.getOrElse(n, 0L) / den)).toMap
     }
     rank
+  }
+
+  /** 4 has no in-edges (its rank is its base term alone), 5 has no
+    * out-edges (its mass is dropped); 1 is the hub. */
+  private val sourceAndSink =
+    Seq((1L, 2L), (2L, 1L), (3L, 1L), (1L, 3L), (4L, 1L), (2L, 5L))
+
+  private def pageRank(edges: Seq[(Long, Long)], iters: Int, broadcastRanks: Boolean,
+                       seeds: Option[Set[Long]] = None): Map[Long, Long] = {
+    val s = spark
+    import s.implicits._
+    graft.operators.PageRank
+      .run(edges.toDF("src", "dst"), iters, scale = 1000000L,
+        broadcastRanks = broadcastRanks, seeds = seeds.map(_.toSeq.toDF("node")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   test("PageRank matches the pure integer reference on an asymmetric graph") {
@@ -73,6 +91,31 @@ class AnalyticsSpec extends AnyFunSuite {
       .run(edges.toDF("src", "dst"), iters = 5, scale = 1000000000L)
       .collect().map(_.getLong(1))
     assert(got.forall(_ == 1000000000L))
+  }
+
+  test("PageRank keeps source-only and dangling nodes under both rank joins") {
+    val want = refPageRank(sourceAndSink, 4, 1000000L)
+    assert(want.keySet == Set(1L, 2L, 3L, 4L, 5L))
+    // a node nothing points to keeps exactly its restart term
+    assert(want(4L) == 1000000L / 100 * 15)
+    assert(pageRank(sourceAndSink, 4, broadcastRanks = true) == want)
+    assert(pageRank(sourceAndSink, 4, broadcastRanks = false) == want)
+  }
+
+  test("personalized PageRank matches the integer reference with a seed set") {
+    val seeds = Set(3L, 4L)
+    val want = refPageRank(sourceAndSink, 4, 1000000L, seeds = Some(seeds))
+    // the seeded source keeps its restart term
+    assert(want(4L) == 1000000L / 100 * 15)
+    assert(want.keySet == Set(1L, 2L, 3L, 4L, 5L))
+    val bc = pageRank(sourceAndSink, 4, broadcastRanks = true, seeds = Some(seeds))
+    assert(bc == want)
+    assert(pageRank(sourceAndSink, 4, broadcastRanks = false, seeds = Some(seeds)) == bc)
+    // an unseeded node with no in-edges keeps its row, at rank 0
+    val unseededSource = refPageRank(sourceAndSink, 4, 1000000L, seeds = Some(Set(3L)))
+    assert(unseededSource(4L) == 0L)
+    assert(pageRank(sourceAndSink, 4, broadcastRanks = true, seeds = Some(Set(3L))) ==
+      unseededSource)
   }
 
   // ------------------------------------------------------- q77 … q81

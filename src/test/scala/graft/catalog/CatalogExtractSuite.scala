@@ -363,4 +363,23 @@ class CatalogExtractSuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.table(s"$target.odd_part").count() == values.size)
     }
   }
+
+  test("round-trip: a comment holding `;`, a newline and `--` replays intact") {
+    val note = "a;\n-- b"
+    val sqlNote = note.replace("\n", "\\n")
+    spark.sql("CREATE DATABASE IF NOT EXISTS semidb")
+    spark.sql("DROP TABLE IF EXISTS semidb.noted")
+    spark.sql(s"""CREATE TABLE semidb.noted (x INT COMMENT '$sqlNote') USING parquet
+                 |LOCATION '$dataDir/noted' COMMENT '$sqlNote'""".stripMargin)
+    def meta(db: String) = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier("noted", Some(db)))
+    assert(meta("semidb").comment.contains(note))
+    for ((cfg, target) <- Seq(ctx -> "semidb_ctx", qual -> "semidb_qual")) {
+      val script = DdlExtract.extract(spark, "semidb", "noted", cfg).script
+      spark.sql(s"DROP DATABASE IF EXISTS $target CASCADE")
+      ScriptReplay.replay(spark, script.replace("semidb", target))
+      assert(meta(target).comment.contains(note), script)
+      assert(meta(target).schema == meta("semidb").schema, script)
+    }
+  }
 }

@@ -139,4 +139,19 @@ class ScriptReplaySpec extends AnyFunSuite {
       "CREATE TABLE t1 (\n  a INT)\nUSING parquet",
       "MSCK REPAIR TABLE t1"))
   }
+
+  test("statements: quoted `;` at EOL and quoted `--` lines stay in their statement") {
+    val script =
+      """CREATE TABLE t1 (`a;` INT COMMENT 'x;
+        |-- y', b STRING COMMENT "it\"s;
+        |!z") COMMENT 'it\'s;
+        |';
+        |-- t2
+        |USE db1;
+        |""".stripMargin
+    assert(ScriptReplay.statements(script) == Seq(
+      "CREATE TABLE t1 (`a;` INT COMMENT 'x;\n-- y', b STRING COMMENT \"it\\\"s;\n!z\") " +
+        "COMMENT 'it\\'s;\n'",
+      "USE db1"))
+  }
 }
