@@ -94,8 +94,8 @@ object Tables {
     * multiply-referenced assignment subtree regressed q166 18× at sf1
     * — fixed at the consumer instead of pinning the input layout: the
     * k-means training input and the IVF assignment table are now
-    * pinned once (`KMeans.train` / `VectorSearch.ivfSearch`
-    * localCheckpoint their bounded intermediates), so an upstream
+    * pinned once (`KMeans.train` / `VectorSearch.ivfSearch` hold their
+    * bounded intermediates with [[graft.Pin.during]]), so an upstream
     * exchange is evaluated once per pipeline, not once per job.
     */
   private val spreadKeys =

@@ -38,10 +38,6 @@ object CatalogOps {
         .map(_.table).sorted
     }.getOrElse(Seq.empty)
 
-  /** Progress pre-pass (`ExtractHiveDDL.java:60-61`): total table count. */
-  def countTables(spark: SparkSession, dbNames: Seq[String], tablePattern: String): Int =
-    dbNames.map(listTables(spark, _, tablePattern).size).sum
-
   /** Metadata of the named tables of one database, in `names` order,
     * from one bulk metastore call. A name missing from the answer (the
     * table was dropped after it was listed) is a `NoSuchTableException`

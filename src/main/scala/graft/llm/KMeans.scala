@@ -155,9 +155,9 @@ object KMeans {
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val M = 1048576L // 2^20 draw resolution
-    // pinned: re-scanned once per round + twice after
+    // cut: re-scanned once per round + twice after
     val sv = df.select(col(idCol), quantize(col(vecCol)).as("sv"))
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     val seed = sv.orderBy(col(idCol)).limit(1).collect()
     if (seed.isEmpty) return Seq.empty
     var cand: Seq[(Long, Array[Long])] =

@@ -66,40 +66,35 @@ object Lexical {
     * TakeOrdered. Output: (idCol, n_terms int, score double).
     */
   def bm25Search(df: DataFrame, idCol: String, textCol: String,
-                 terms: Seq[String], topK: Int = 20): DataFrame =
-    bm25Stats(df, idCol, textCol, terms) { (hits, dfreq, corpus) =>
-      bm25Score(hits, dfreq, corpus, idCol, topK).localCheckpoint(true)
-    }
+                 terms: Seq[String], topK: Int = 20): DataFrame = {
+    val (hits, dfreq, corpus) = bm25Stats(df, idCol, textCol, terms)
+    bm25Score(hits, dfreq, corpus, idCol, topK)
+  }
 
-  /** The shared sufficient-statistics pass: per-(doc, term) postings
-    * with doc length, per-term document frequencies, corpus (N, T),
-    * handed to `use`.
-    *
-    * `hits` (query-term-filtered, so tiny) and the 1-row `corpus` are
-    * pinned ([[graft.Pin]]) for the duration of `use`: every consumer
-    * reference otherwise re-runs a full corpus tokenize pass —
-    * [[bm25MaxScorePruned]] references the scored-term table five
-    * times (UB, seed, θ, sieve, final scoring), which was ~5 corpus
-    * scans per query (§2.4). Both pins are reduced tables (no text
-    * column). A frame `use` returns must not read the pins lazily.
+  /** The shared sufficient-statistics plans, all lazy: per-(doc, term)
+    * postings `hits` with doc length, per-term document frequencies
+    * `dfreq` (an aggregate of `hits`), and the 1-row corpus (N, T).
+    * In one query plan the two reads of `hits` share the input's
+    * exchange through Spark's exchange reuse (a `Tables.load` spread of
+    * `documents` is shuffled once) and each tokenizes its partitions.
     */
-  private def bm25Stats[T](df: DataFrame, idCol: String, textCol: String,
-                           terms: Seq[String])
-                          (use: (DataFrame, DataFrame, DataFrame) => T): T = {
+  private def bm25Stats(df: DataFrame, idCol: String, textCol: String,
+                        terms: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
     require(terms.nonEmpty, "need at least one query term")
-    val toks = df.select(col(idCol), split(col(textCol), " ").as("t"))
-      .select(col(idCol), size(col("t")).cast("long").as("dl"),
-        explode(col("t")).as("tok"))
+    val toks = tokens(df, idCol, textCol)
     // dl is functionally dependent on the doc id — grouping by it is
     // free and carries the length through to the scoring join
     val hits = toks.where(col("tok").isin(terms: _*))
       .groupBy(col(idCol), col("dl"), col("tok")).agg(count(lit(1)).as("tf"))
     val corpus = df.select(size(split(col(textCol), " ")).cast("long").as("dl"))
       .agg(count(lit(1)).as("nd"), sum(col("dl")).as("tt"))
-    graft.Pin.during(hits, corpus) {
-      use(hits, hits.groupBy(col("tok")).agg(count(lit(1)).as("dft")), corpus)
-    }
+    (hits, hits.groupBy(col("tok")).agg(count(lit(1)).as("dft")), corpus)
   }
+
+  /** One row per (doc, token), with the doc's token count `dl`. */
+  private def tokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), split(col(textCol), " ").as("t"))
+      .select(col(idCol), size(col("t")).cast("long").as("dl"), explode(col("t")).as("tok"))
 
   /** The BM25 scoring tail over precomputed sufficient statistics —
     * shared by [[bm25Search]] (fresh single-corpus stats) and the
@@ -160,9 +155,7 @@ object Lexical {
                 terms: Seq[String], mu: Double = 2000.0,
                 topK: Int = 20): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
-    val toks = df.select(col(idCol), split(col(textCol), " ").as("t"))
-      .select(col(idCol), size(col("t")).cast("long").as("dl"),
-        explode(col("t")).as("tok"))
+    val toks = tokens(df, idCol, textCol)
     val qtoks = toks.where(col("tok").isin(terms: _*))
     val hits = qtoks.groupBy(col(idCol), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
@@ -226,8 +219,13 @@ object Lexical {
     * (the declared query shares q90's exhaustive-scoring oracle).
     */
   def bm25MaxScorePruned(df: DataFrame, idCol: String, textCol: String,
-                         terms: Seq[String], topK: Int = 20): DataFrame =
-    bm25Stats(df, idCol, textCol, terms) { (hits, dfreq, corpus) =>
+                         terms: Seq[String], topK: Int = 20): DataFrame = {
+    val (hits, dfreq, corpus) = bm25Stats(df, idCol, textCol, terms)
+    // the scored terms are read five times (UB, seed, θ, sieve, final
+    // scoring), and each read would otherwise re-run the corpus
+    // tokenize pass: `hits` (query-term-filtered) and the 1-row
+    // `corpus` are pinned for the scope, and the top-k leaves it cut
+    graft.Pin.during(hits, corpus) {
       val ts = scoredTerms(hits, dfreq, corpus)
       val ub = ts.groupBy(col("tok")).agg(max(col("term_score")).as("ub"))
       val topTerm = ub.orderBy(col("ub").desc, col("tok")).limit(1)
@@ -242,8 +240,9 @@ object Lexical {
         .where(col("nseed") < topK || col("ub_doc") + lit(1e-6) >= col("th"))
         .select(col(idCol))
       scoreTail(ts.join(survivors, Seq(idCol), "left_semi"), idCol, topK)
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
     }
+  }
 
   // ------------------------------------------------ BM25 index store
 
@@ -281,9 +280,7 @@ object Lexical {
     // never empty, so every document owns ≥1 posting row), so
     // nd = row count and tt = Σ dl over that projection — identical
     // values to the direct-from-text aggregate they replace.
-    val postings = df.select(col(idCol), split(col(textCol), " ").as("t"))
-      .select(col(idCol), size(col("t")).cast("long").as("dl"),
-        explode(col("t")).as("tok"))
+    val postings = tokens(df, idCol, textCol)
       .groupBy(col(idCol), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     graft.Pin.during(postings) {

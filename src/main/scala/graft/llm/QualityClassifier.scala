@@ -110,7 +110,7 @@ object QualityClassifier {
             (lit(cfg.eta) * coalesce(col("g"), lit(0)).cast("double")) /
               lit(n.toDouble), 9)
             .cast("decimal(18,9)").as("w"))
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
     }
     w
   }

@@ -350,7 +350,7 @@ object TextDedup {
             StructField("keep_id", batch.schema(idCol).dataType))))
       }
     val classified = exactClassify(batch, idCol, textCol, store)
-      .localCheckpoint(true)
+      .transform(graft.Pin.cut)
     val additions = classified.where(col("status") === "unique")
       .select(col("text_sha"), col(idCol).as("keep_id"))
     batchId match {
@@ -855,7 +855,7 @@ object TextDedup {
     val selfPairs = minHashLshPairs(batch, idCol, textCol, n, k, bands)
       .select(col("d1").as("d_hist"), col("d2").as("d_new"),
         col("est_sim"), col("jac"))
-    val pairs = histPairs.unionByName(selfPairs).localCheckpoint(true)
+    val pairs = histPairs.unionByName(selfPairs).transform(graft.Pin.cut)
     val dupIds = pairs.select(col("d_new")).distinct()
       .withColumnRenamed("d_new", idCol)
     val survivors = batch.join(dupIds, Seq(idCol), "left_anti")
@@ -1001,18 +1001,18 @@ object TextDedup {
     * sides are `distinct()` outputs, so equal count + empty difference
     * ⇒ equal sets). The exact pass normally runs once, at convergence,
     * and turns a checksum collision from wrong labels into one extra
-    * round. Each round is `localCheckpoint`ed so lineage stays flat.
+    * round. Each round is cut ([[graft.Pin.cut]]) so lineage stays flat.
     * Returns the labels and the round count (exposed for the
     * diameter-independence test).
     */
   private[llm] def starContraction(edges0: DataFrame): (DataFrame, Int) = {
-    var e = edges0.localCheckpoint()
+    var e = edges0.transform(graft.Pin.cut)
     var signature = e.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")))
       .head()
     var rounds = 0
     var converged = e.isEmpty
     while (!converged) {
-      val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
+      val next = smallStar(largeStar(e)).transform(graft.Pin.cut)
       val sig = next.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")))
         .head()
       rounds += 1

@@ -14,6 +14,15 @@ object TextStats {
   /** Whitespace-token column helper. */
   private def toks(textCol: String): Column = split(col(textCol), " ")
 
+  /** One row per adjacent-token pair (`w1`, `w2`) of `textCol`,
+    * carrying the `keep` columns; docs under two tokens have none. */
+  private def bigramPairs(df: DataFrame, textCol: String, keep: Column*): DataFrame =
+    df.select(keep :+ toks(textCol).as("t"): _*)
+      .where(size(col("t")) >= 2)
+      .select(keep :+ explode(expr(
+        "transform(slice(t, 1, size(t) - 1), (w, i) -> struct(w AS w1, t[i + 1] AS w2))")).as("p"): _*)
+      .select(keep ++ Seq(col("p.w1"), col("p.w2")): _*)
+
   /** Grouped token statistics (single tokenize+explode pass; doc-level
     * stats ride on each document's pos=0 row).
     * Output: groupCols*, n_docs, n_tokens, avg_tokens, max_tok_len,
@@ -149,12 +158,7 @@ object TextStats {
     * Output: w1, w2, cnt, ctx_cnt, cond_p.
     */
   def bigramModel(df: DataFrame, textCol: String): DataFrame = {
-    val pairs = df
-      .select(toks(textCol).as("t"))
-      .where(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(slice(t, 1, size(t) - 1), (w, i) -> struct(w AS w1, t[i + 1] AS w2))")).as("p"))
-      .select(col("p.w1"), col("p.w2"))
+    val pairs = bigramPairs(df, textCol)
     val counts = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
     val ctx = counts.groupBy(col("w1")).agg(sum(col("cnt")).as("ctx_cnt"))
     counts.join(ctx, "w1")
@@ -186,18 +190,13 @@ object TextStats {
     */
   def kneserNeyBigram(df: DataFrame, textCol: String,
                       discount: Double = 0.75): DataFrame = {
-    val pairs = df
-      .select(toks(textCol).as("t"))
-      .where(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(slice(t, 1, size(t) - 1), (w, i) -> struct(w AS w1, t[i + 1] AS w2))")).as("p"))
-      .select(col("p.w1"), col("p.w2"))
+    val pairs = bigramPairs(df, textCol)
     // the model (vocabulary²-bounded) materializes once — its FOUR
     // consumers below (ctx, cont, types, the join spine) would
     // otherwise each re-run the final aggregate over the (reused)
     // pair-stream exchange; the bigramSurprise pin, same reasoning
     val counts = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     val ctx = counts.groupBy(col("w1"))
       .agg(sum(col("cnt")).as("ctx_cnt"), count(lit(1)).as("n1p_left"))
     val cont = counts.groupBy(col("w2")).agg(count(lit(1)).as("cont_cnt"))
@@ -231,17 +230,12 @@ object TextStats {
   def bigramSurprise(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // the pair stream feeds both the model build and the scoring join;
     // materializing it once halves the corpus tokenization passes
-    val pairs = df
-      .select(col(idCol), toks(textCol).as("t"))
-      .where(size(col("t")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(slice(t, 1, size(t) - 1), (w, i) -> struct(w AS w1, t[i + 1] AS w2))")).as("p"))
-      .select(col(idCol), col("p.w1"), col("p.w2"))
-      .localCheckpoint()
+    val pairs = bigramPairs(df, textCol, col(idCol))
+      .transform(graft.Pin.cut)
     // the model (vocabulary²-bounded) also materializes once: its three
     // consumers below would otherwise each re-shuffle the pair stream
     val counts = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     val ctx = counts.groupBy(col("w1")).agg(sum(col("cnt")).as("ctx_cnt"))
     val vocab = counts.agg(countDistinct(col("w2")).as("vs"))
     val model = counts.join(ctx, "w1").crossJoin(broadcast(vocab))

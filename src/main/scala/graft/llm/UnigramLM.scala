@@ -110,7 +110,7 @@ object UnigramLM {
     require(rounds >= 0 && maxWordLen >= 1 && maxPieceLen >= 1,
       "rounds >= 0, maxWordLen/maxPieceLen >= 1")
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    val words = wordTable(df, textCol, maxWordLen).localCheckpoint()
+    val words = wordTable(df, textCol, maxWordLen).transform(graft.Pin.cut)
     var vocab = seed(words, maxPieceLen, maxMulti)
     for (_ <- 1 to rounds if vocab.nonEmpty) {
       val votes = words

@@ -318,7 +318,7 @@ object VectorSearch {
         // executor memory for the session; the checkpointed pairs are
         // reclaimed by the ContextCleaner once the caller drops the
         // result
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
     }
     exactRerank(df, idCol, vecCol, cand, k)
   }
@@ -962,7 +962,7 @@ object VectorSearch {
     val cand = sq8IvfFilteredRerank(df, idCol, vecCol, labelCol,
         queryPred, lit(true), m = m, k = m, nprobe = nprobe)
       .select(col("va"), col("vb"), col("cos"))
-      .localCheckpoint(true) // reused by every round + the pair matrix
+      .transform(graft.Pin.cut) // reused by every round + the pair matrix
     val e = withNorm(df, vecCol)
     val pairs = cand.select(col("va"), col("vb").as("b1"))
       .join(cand.select(col("va"), col("vb").as("b2")), "va")
@@ -973,7 +973,7 @@ object VectorSearch {
         col("nrm").as("n2")), "b2")
       .withColumn("pcos", expr(dot("e1", "e2")) / (col("n1") * col("n2")))
       .select(col("va"), col("b1"), col("b2"), col("pcos"))
-      .localCheckpoint(true) // m² per query, probed every round
+      .transform(graft.Pin.cut) // m² per query, probed every round
     var selAcc = cand
       .withColumn("rr", row_number().over(
         Window.partitionBy(col("va")).orderBy(col("cos").desc, col("vb"))))
@@ -1317,7 +1317,7 @@ object VectorSearch {
     */
   def ivfSearch(df: DataFrame, idCol: String, vecCol: String,
                 labelCol: String, k: Int, nprobe: Int = 1): DataFrame =
-    ivfSearchPlan(df, idCol, vecCol, labelCol, k, nprobe)(_.localCheckpoint(true))
+    ivfSearchPlan(df, idCol, vecCol, labelCol, k, nprobe)(graft.Pin.cut)
 
   /** [[ivfSearch]]'s LAZY pipeline, handed to `use` while the caches it
     * reads are pinned — split out so plan-audit tests can inspect the
@@ -1329,15 +1329,17 @@ object VectorSearch {
                                       nprobe: Int)(use: DataFrame => T): T = {
     // Execution shape (the ivfCandidateRerank discipline, round 15):
     //  - the ASSIGNMENT (N×nprobe narrow rows) and the normed vectors
-    //    are PERSISTED, not localCheckpoint'ed — persist keeps the
-    //    logical plan and therefore the size statistics; a checkpoint
-    //    replaces the subtree with a LogicalRDD whose unknown stats
-    //    flipped every downstream broadcast into a sort-merge join
-    //    that re-shuffled and re-SORTED the ~N²/nlist-row pair stream
-    //    (measured at sf1: 14 s → 430 s). Persisting also evaluates
-    //    any upstream exchange (Tables.load spreads byte-small
-    //    embedding files) or label-computing join (q166/q205 train a
-    //    quantizer) exactly once.
+    //    are corpus-sized and read only inside this call, so they are
+    //    pinned for its scope (Pin.during) and released when it ends.
+    //    Either hold keeps true size statistics — a cut's leaf carries
+    //    its measured size — and those decide every downstream join:
+    //    a frame planned with a stale, inflated estimate turned each
+    //    broadcast into a sort-merge join that re-shuffled and
+    //    re-SORTED the ~N²/nlist-row pair stream (measured at sf1:
+    //    14 s → 430 s). The pin also evaluates any upstream exchange
+    //    (Tables.load spreads byte-small embedding files) or
+    //    label-computing join (q166/q205 train a quantizer) exactly
+    //    once.
     //  - vectors are attached to the probed/home sides BEFORE the
     //    expansion join, so nothing joins the pair stream after it
     //    explodes — it flows straight through the cosine projection
@@ -1346,7 +1348,7 @@ object VectorSearch {
     //    with a handful of coarse lists the join key alone has fewer
     //    distinct values than the session has cores, and AQE cannot
     //    see the ~list-size× expansion behind it.
-    //  - the RESULT (N×k rows) is localCheckpoint'ed eagerly — the
+    //  - the RESULT (N×k rows) is cut (graft.Pin.cut) — the
     //    narrowest point of the pipeline — after which the two
     //    corpus-sized caches are dropped instead of pinning executor
     //    memory for the session. The N²/nlist pair table itself is

@@ -118,11 +118,11 @@ object Vocab {
           vocab = vocab.withColumn("sym",
               regexp_replace(col("sym"), lit(mergePattern(l, r)),
                 lit(java.util.regex.Matcher.quoteReplacement(s"$l$r"))))
-            .localCheckpoint(true)
+            .transform(graft.Pin.cut)
         }
       }
       // no merge learned: the pinned word count leaves as a checkpoint
-      if (vocab eq words) words.localCheckpoint(true) else vocab
+      if (vocab eq words) graft.Pin.cut(words) else vocab
     }
     (merges.toSeq.toDF("rank", "left", "right", "pair_cnt"), vocab)
   }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * the edge table on `src` would make every level's expansion join
   * shuffle-free on the edge side); the frontier and visited sets are
   * node-sized, not edge-sized. Each level's frontier is materialized
-  * via `localCheckpoint`, truncating the iterative lineage exactly as
+  * by [[graft.Pin.cut]], truncating the iterative lineage exactly as
   * [[PageRank]] does, so depth is bounded by memory, not by plan
   * growth. Early exit on an empty frontier costs nothing extra — the
   * count that detects it is the same action that materializes the
@@ -40,7 +40,7 @@ object Bfs {
     val e = edges.select(col("src"), col("dst"))
     graft.Pin.during(e) {
       var visited = seeds.select(col("node")).distinct()
-        .withColumn("hop", lit(0)).localCheckpoint(true)
+        .withColumn("hop", lit(0)).transform(graft.Pin.cut)
       var frontier = visited
       var hop = 1
       while (hop <= maxHops && !frontier.isEmpty) {
@@ -49,8 +49,8 @@ object Bfs {
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")), Seq("node"), "left_anti")
           .withColumn("hop", lit(hop))
-          .localCheckpoint(true)
-        visited = visited.union(next).localCheckpoint(true)
+          .transform(graft.Pin.cut)
+        visited = visited.union(next).transform(graft.Pin.cut)
         frontier = next
         hop += 1
       }

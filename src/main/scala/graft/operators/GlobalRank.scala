@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *      hundreds of rows, never data rows);
   *   4. global rank = partition offset + local row number.
   *
-  * The range-partitioned frame is `localCheckpoint`ed before step 2:
+  * The range-partitioned frame is cut ([[graft.Pin.cut]]) before step 2:
   * range boundaries come from sampling, so two lazy evaluations of the
   * same plan could otherwise disagree on partition membership between
   * the offsets pass and the join-back.
@@ -29,22 +29,30 @@ import org.apache.spark.sql.functions._
   */
 object GlobalRank {
 
+  /** Step 1: `df` range-partitioned on `sortCols`, tagged with its
+    * partition id `__pid` and cut, so the sampled range bounds are
+    * evaluated once for every later pass. */
+  private def rangeCut(df: DataFrame, sortCols: Seq[Column]): DataFrame =
+    df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions, sortCols: _*)
+      .withColumn("__pid", spark_partition_id())
+      .transform(graft.Pin.cut)
+
+  /** Σ `c` over the partitions before this row's, in `__pid` order
+    * (0 for the first): a partition's offset in the global order. */
+  private def offsetOf(c: Column): Column =
+    coalesce(sum(c).over(
+      Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
   /** Shared frame: every row carries its contiguous global rank
     * (`__grank`) and the total row count (`__total`, same value on
     * every row — it rides along in the broadcast offsets table, so no
     * separate count job rescans the data). */
   private def rankedWithTotal(df: DataFrame, sortCols: Seq[Column]): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val ranged = rangeCut(df, sortCols)
     val local = ranged.withColumn("__rn",
       row_number().over(Window.partitionBy(col("__pid")).orderBy(sortCols: _*)))
     val offsets = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(sum(col("__cnt")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
+      .withColumn("__offset", offsetOf(col("__cnt")))
       .withColumn("__total",
         sum(col("__cnt")).over(
           Window.orderBy(col("__pid"))
@@ -76,20 +84,14 @@ object GlobalRank {
     * as the AUC consumer (q209) does. */
   def withPrefixSum(df: DataFrame, sortCols: Seq[Column], valueCol: String,
                     outCol: String): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val ranged = rangeCut(df, sortCols)
     val local = ranged.withColumn("__lps",
       coalesce(sum(col(valueCol)).over(
         Window.partitionBy(col("__pid")).orderBy(sortCols: _*)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
     val offsets = ranged.groupBy(col("__pid"))
       .agg(sum(col(valueCol)).as("__psum"))
-      .withColumn("__offset",
-        coalesce(sum(col("__psum")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
+      .withColumn("__offset", offsetOf(col("__psum")))
       .select(col("__pid"), col("__offset"))
     local.join(broadcast(offsets), "__pid")
       .withColumn(outCol, (col("__offset") + col("__lps")).cast("long"))

@@ -73,7 +73,7 @@ object LabelPropagation {
         labels = labels.join(winners, Seq("node"), "left")
           .select(col("node"),
             coalesce(col("new_label"), col("label")).as("label"))
-          .localCheckpoint()
+          .transform(graft.Pin.cut)
       }
       labels
     }

@@ -20,22 +20,24 @@ import org.apache.spark.sql.functions._
   * Scale design: the edge list is coalesced to its data size
   * ([[graft.Pin.fit]]) and pinned with its out-degrees — it is reused
   * every iteration. Each iteration is one join of the edges with the
-  * rank table plus ONE partial-aggregated shuffle on the node: the
-  * node set's base terms and the edge contributions are unioned and
-  * summed together, so every node keeps its row through its base row
-  * without a join back to the node set. That is the textbook O(iters)
-  * round structure — no driver-side state, no collect; rank-table size
-  * is |V|, edge table |E|, both partition-parallel. Overflow bound:
-  * total in-flight mass is ≤ |V|·scale, so |V|·scale must stay below
-  * 2^63 (document at call site; 10^6 nodes at the default scale is
-  * safe by 3 orders).
+  * broadcast rank table plus ONE partial-aggregated shuffle on the
+  * node, its only shuffle: the node set's base terms and the edge
+  * contributions are unioned and summed together, so every node keeps
+  * its row through its base row without a join back to the node set.
+  * That is the textbook O(iters) round structure — no driver-side
+  * state, no collect; the rank table is |V| rows, the edge table |E|,
+  * partition-parallel. Overflow bound: total in-flight mass is
+  * ≤ |V|·scale, so |V|·scale must stay below 2^63 (document at call site; 10^6 nodes at the default scale is
+  * safe by 3 orders). That bound keeps |V| under ~9.2M nodes at the
+  * default scale, a rank table every executor can hold, so it is
+  * always broadcast.
   */
 object PageRank {
 
   /** The edge list is sized with [[graft.Pin.fit]], the three static
     * tables (fitted edges, node set, degree-joined edges) are pinned
-    * while the fixpoint is computed, and the result is returned as an
-    * eager local checkpoint, so no cache outlives the call. On the
+    * while the fixpoint is computed, and the result leaves as a cut
+    * ([[graft.Pin.cut]]), so no cache outlives the call. On the
     * `query_graph` benchmark (4 cores, `BENCH_GRAPH_AB.json`) the
     * fitted edges and the one-aggregation round took a traced pass
     * from 272 tasks in 72 stages to 59 in 59, and q82 in that pass
@@ -44,21 +46,12 @@ object PageRank {
     * @param edges two columns `src`, `dst` (long node ids); multi-edges
     *              should be `.distinct()`-ed by the caller if unwanted
     * @param iters number of synchronous iterations (≥ 0)
-    * @param broadcastRanks when the node set fits in executor memory
-    *              (catalog-sized graphs like part↔supplier), broadcast
-    *              the rank table into each iteration's edge join —
-    *              the round's partial-agg shuffle is then its only
-    *              one. Leave false for web-scale graphs, where
-    *              ranks must stay partitioned.
     * @return one row per node: `node`, `rank` (scaled long)
     */
   def run(edges: DataFrame, iters: Int,
           scale: Long = 1000000000000L,
           dampNum: Long = 85, dampDen: Long = 100,
-          broadcastRanks: Boolean = false,
           seeds: Option[DataFrame] = None): DataFrame = {
-    val bc: DataFrame => DataFrame =
-      if (broadcastRanks) org.apache.spark.sql.functions.broadcast else identity
     // personalized PageRank (Page et al. 1999 §6, "personalized"
     // teleport): restart mass lands only on the seed set instead of
     // uniformly — ranks then measure importance RELATIVE to the seeds
@@ -98,7 +91,7 @@ object PageRank {
         when(col("__seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
       for (_ <- 1 to iters) {
         val contrib = edgesDeg
-          .join(bc(ranks), edgesDeg("src") === ranks("node"))
+          .join(broadcast(ranks), edgesDeg("src") === ranks("node"))
           .select(col("dst").as("node"), lit(0L).as("b"),
             expr("rank div outdeg").as("c"))
         ranks = baseTerms.union(contrib)
@@ -109,7 +102,7 @@ object PageRank {
       // (edge plan → nodes/degrees → iterations); the checkpointed
       // fixpoint is reclaimed by the ContextCleaner once the caller
       // drops the reference
-      ranks.localCheckpoint(true)
+      graft.Pin.cut(ranks)
     }
   }
 }

@@ -214,8 +214,7 @@ object Analytics {
     val rev = pairs.select((col("l_suppkey") * 2 + 1).as("src"),
       (col("l_partkey") * 2).as("dst"))
     graft.operators.PageRank
-      .run(fwd.union(rev), iters = 3, scale = 1000000000L,
-        broadcastRanks = true)
+      .run(fwd.union(rev), iters = 3, scale = 1000000000L)
       .select(
         when(col("node") % 2 === 0, "part").otherwise("supplier").as("kind"),
         expr("node div 2").as("key"), col("node"), col("rank").as("rank_val"))
@@ -512,7 +511,7 @@ object Analytics {
       // materialized once (lineage-truncating), then read three times
       // by the census below — without this the edge build would run
       // per reference
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     // one pass over the wedges: a LEFT join against the closing edge
     // (oriented + distinct ⇒ at most one match, no row duplication)
     // yields wedge and triangle counts from the same aggregate
@@ -810,8 +809,7 @@ object Analytics {
     val seeds = t(spark, sfDir, "part").where(col("p_partkey") <= 50)
       .select((col("p_partkey") * 2).as("node"))
     graft.operators.PageRank
-      .run(fwd.union(rev), iters = 3, scale = 1000000000L,
-        broadcastRanks = true, seeds = Some(seeds))
+      .run(fwd.union(rev), iters = 3, scale = 1000000000L, seeds = Some(seeds))
       .select(
         when(col("node") % 2 === 0, "part").otherwise("supplier").as("kind"),
         expr("node div 2").as("key"), col("node"), col("rank").as("rank_val"))

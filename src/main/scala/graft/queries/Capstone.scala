@@ -112,7 +112,7 @@ object Capstone {
         .orderBy(col("avg_logscore").asc, col("doc_id"))
         .limit(n)
         .select(col("doc_id"))
-      corpus.join(rejects, Seq("doc_id"), "left_anti").localCheckpoint(true)
+      corpus.join(rejects, Seq("doc_id"), "left_anti").transform(graft.Pin.cut)
     }
   }
 
@@ -154,7 +154,7 @@ object Capstone {
         .orderBy(col("logw").desc, col("doc_id"))
         .limit(n)
         .select(col("doc_id"))
-      corpus.join(top, "doc_id").localCheckpoint(true)
+      corpus.join(top, "doc_id").transform(graft.Pin.cut)
     }
   }
 
@@ -175,7 +175,7 @@ object Capstone {
     // once (§2.4)
     val d = docs(spark, sfDir)
     graft.Pin.during(d) {
-      // Stage boundaries are EAGERLY pinned (localCheckpoint(true)):
+      // Stage boundaries are cut (graft.Pin.cut, eager):
       // several downstream operators run driver-side iterations with
       // their own actions (k-means passes, BPE merge rounds, the
       // stage-stat union's nine branches), and without lineage
@@ -186,17 +186,17 @@ object Capstone {
       val s1 = d.select(col("doc_id"), col("lang"), col("source"), col("text"))
         .join(graft.llm.TextDedup.exactDuplicates(d, "doc_id", "text")
           .where(col("kept")).select("doc_id"), "doc_id")
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
       // s2: repeated-span scrub on the deduped corpus; text := clean_text
       val s2 = s1.drop("text")
         .join(graft.llm.TextDedup.scrubSpans(s1, "doc_id", "text", minTokens = 15)
           .select(col("doc_id"), col("clean_text").as("text")), "doc_id")
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
       // s3: quality floor on the scrubbed text
       val s3 = graft.llm.TextStats
         .withQualityScore(s2, "text", Seq("a", "the"))
         .where(col("score") >= 0.5).drop("score")
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
       // s4: Stupid-Backoff LM filter — reject the 100 worst
       val s4 = lmFilter(s3, LmRejectK)
       // s5: decontamination — bench arrives RAW from outside the pipe
@@ -206,23 +206,23 @@ object Capstone {
         .contaminationOverlap(corpus, bench, "doc_id", "text", n = 3)
         .select("doc_id").distinct()
       val s5 = corpus.join(contaminated, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
       // s6: near-dup prune (q126's non-transitive pair rule)
       val removed = graft.llm.TextDedup
         .minHashLshPairs(s5, "doc_id", "text", n = 3, k = 12, bands = 4)
         .where(col("jac") >= 0.6)
         .select(col("d2").as("doc_id")).distinct()
       val s6 = s5.join(removed, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
       // s7: SemDeDup on the SURVIVORS' embeddings (doc_id = vec_id)
       val e = Tables.load(spark, sfDir, "embeddings")
       val sem = graft.llm.VectorSearch.semDedup(
         e.join(s6.select(col("doc_id").as("vec_id")), "vec_id")
-          .localCheckpoint(true),
+          .transform(graft.Pin.cut),
         "vec_id", "embedding", k = 8, passes = 2, minCos = 0.4)
       val s7 = s6.join(sem.where(col("kept"))
         .select(col("vec_id").as("doc_id")), "doc_id")
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
       // s8: DSIR selection — top 100 toward the en target
       val s8 = dsirSelect(s7, DsirKeepK)
       // s9: tokenizer fit + encode + pack on the final selection —
@@ -258,7 +258,7 @@ object Capstone {
           .unionByName(stat("s8_dsir", s8))
           .unionByName(packStat)
           .orderBy(col("stage"))
-          .localCheckpoint(true)
+          .transform(graft.Pin.cut)
       }
     }
   }

@@ -491,7 +491,7 @@ object Events {
       .distinct()
       // (users × weeks)-bounded; materialized once so the cohort
       // assignment and the activity join don't each rescan raw events
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     val first = uw.groupBy(col("user_id")).agg(min(col("wk")).as("cohort_week"))
     val m = uw.join(first, "user_id")
       .withColumn("week_offset",
@@ -540,7 +540,7 @@ object Events {
   def q99(spark: SparkSession, sfDir: String): DataFrame = {
     val dayUser = ev(spark, sfDir)
       .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
-      .localCheckpoint() // (days × users)-bounded; shared by both sides
+      .transform(graft.Pin.cut) // (days × users)-bounded; shared by both sides
     val maxDay = dayUser.agg(max(col("day")).as("max_day"))
     // exact side: expand each (day, user) to its 7 target days
     val exact = dayUser
@@ -1152,7 +1152,7 @@ object Events {
     val e = ev(spark, sfDir).select(col("user_id"), to_date(col("ts")).as("day"))
     graft.Pin.during(e) {
       val grid = CountMin.merge(CountMin.sketch(e, "user_id", d, w, Seq("day")))
-      cmsReport(e, grid, d, w).localCheckpoint(true)
+      cmsReport(e, grid, d, w).transform(graft.Pin.cut)
     }
   }
 

@@ -1069,15 +1069,18 @@ object Similarity {
     * search itself keeps ivfSearch's one list_id-keyed shuffle.
     * Output shape matches q57 for direct comparison.
     */
-  def q166(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = emb(spark, sfDir)
-    // NOT checkpointed: ivfSearch persists its normed input once, so
-    // the assignment pass (and any upstream load exchange) is already
-    // evaluated exactly once — and a localCheckpoint here would erase
-    // the size statistics downstream broadcast decisions need (the
-    // round-15 18×-regression lesson; see ivfSearch's scaladoc)
+  def q166(spark: SparkSession, sfDir: String): DataFrame =
+    kMeansIvf(emb(spark, sfDir), nlist = 8)
+
+  /** q166/q205's search: `e` labelled by an `nlist`-center k-means
+    * codebook, then IVF-searched over those labels. */
+  private def kMeansIvf(e: DataFrame, nlist: Int): DataFrame = {
+    // not cut: ivfSearch pins its normed input once, so the assignment
+    // pass (and any upstream load exchange) is already evaluated
+    // exactly once; `cid` is read once, and a cut is for frames read
+    // more than once (see graft.Pin.cut)
     val cid = graft.llm.KMeans
-      .assign(e, "vec_id", "embedding", k = 8, passes = 2)
+      .assign(e, "vec_id", "embedding", k = nlist, passes = 2)
       .select(col("vec_id"), col("cid"))
     graft.llm.VectorSearch
       .ivfSearch(e.join(cid, "vec_id"), "vec_id", "embedding", "cid",
@@ -1109,17 +1112,7 @@ object Similarity {
     */
   def q205(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val k = math.max(8, math.floor(math.sqrt(e.count().toDouble)).toInt)
-    // not checkpointed — same reasoning as q166 (ivfSearch persists
-    // its input once; a checkpoint here would erase join statistics)
-    val cid = graft.llm.KMeans
-      .assign(e, "vec_id", "embedding", k = k, passes = 2)
-      .select(col("vec_id"), col("cid"))
-    graft.llm.VectorSearch
-      .ivfSearch(e.join(cid, "vec_id"), "vec_id", "embedding", "cid",
-        k = 3, nprobe = 2)
-      .select(col("va"), col("rn"), col("nn"), round(col("cos"), 6).as("cos"))
-      .orderBy(col("va"), col("rn"))
+    kMeansIvf(e, nlist = math.max(8, math.floor(math.sqrt(e.count().toDouble)).toInt))
   }
 
   /** q166's CTE chain with the codebook size dynamic: nlist =
@@ -2237,7 +2230,7 @@ object Similarity {
     // 64 rows, two broadcast consumers — pin so the corpus scan runs once
     val m = q.select(posexplode(col("qv")).as(Seq("i", "qi")))
       .groupBy(col("i")).agg(sum(col("qi")).as("m"))
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     // CHAINED generators, not a nested higher-order transform: Spark
     // evaluates lambda functions interpreted, and an interpreted
     // 2080-struct-per-row fold was measured 2 orders slower than the
@@ -2259,7 +2252,7 @@ object Similarity {
       .crossJoin(broadcast(n))
       .select(col("i"), col("j"),
         (col("n") * col("s") - col("m_i") * col("m_j")).as("c"))
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     val cFull = cUpper.select(col("i"), col("j"), col("c"))
       .union(cUpper.where(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("c")))

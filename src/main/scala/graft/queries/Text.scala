@@ -536,7 +536,7 @@ object Text {
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n"))
       // grid-bounded (langs × sources); materialized once so the four
       // consumers below share a single corpus scan
-      .localCheckpoint()
+      .transform(graft.Pin.cut)
     val langT = counts.groupBy(col("lang")).agg(sum(col("n")).as("rt"))
     val srcT = counts.groupBy(col("source")).agg(sum(col("n")).as("ct"))
     val tot = counts.agg(sum(col("n")).as("nn"))
@@ -820,7 +820,7 @@ object Text {
           sum(col("n_tokens").cast("long")).as("sum_subwords"),
           sum(col("id_sum")).as("sum_subword_ids"))
         .orderBy(col("bucket"), col("batch"))
-        .localCheckpoint(true)
+        .transform(graft.Pin.cut)
     }
   }
 

@@ -72,7 +72,7 @@ object TextClassifierEval {
     QualityClassifier.score(QualityClassifier.featurize(d, "doc_id", "text", qcCfg), w)
       .join(labels, "id")
       .select(col("id").as("doc_id"), col("y").as("label"), col("score"))
-      .localCheckpoint(true)
+      .transform(graft.Pin.cut)
   }
 
   def q203(spark: SparkSession, sfDir: String): DataFrame =

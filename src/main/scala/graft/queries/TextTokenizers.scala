@@ -380,7 +380,7 @@ object TextTokenizers {
       maxMulti = UnigramMulti)
     val wp = graft.llm.UnigramLM
       .wordPieces(d, "text", vocab, UnigramMaxW, UnigramMaxP)
-      .localCheckpoint() // one segmentation pass, three consumers
+      .transform(graft.Pin.cut) // one segmentation pass, three consumers
     val wordStats = wp
       .select(col("word"), posexplode(col("pieces")).as(Seq("ppos", "piece")))
       .groupBy(col("word"))

@@ -40,13 +40,13 @@ class AnalyticsSpec extends AnyFunSuite {
   private val sourceAndSink =
     Seq((1L, 2L), (2L, 1L), (3L, 1L), (1L, 3L), (4L, 1L), (2L, 5L))
 
-  private def pageRank(edges: Seq[(Long, Long)], iters: Int, broadcastRanks: Boolean,
+  private def pageRank(edges: Seq[(Long, Long)], iters: Int,
                        seeds: Option[Set[Long]] = None): Map[Long, Long] = {
     val s = spark
     import s.implicits._
     graft.operators.PageRank
       .run(edges.toDF("src", "dst"), iters, scale = 1000000L,
-        broadcastRanks = broadcastRanks, seeds = seeds.map(_.toSeq.toDF("node")))
+        seeds = seeds.map(_.toSeq.toDF("node")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -73,7 +73,7 @@ class AnalyticsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == refPageRank(edges, 4, 1000000L))
     // the three MEMORY_AND_DISK intermediates must be unpersisted; only
-    // the localCheckpoint of the returned fixpoint may remain (it is
+    // the cut of the returned fixpoint may remain (it is
     // ContextCleaner-reclaimed once the reference drops)
     val leaked = s.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => before.contains(id) }
@@ -93,13 +93,12 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got.forall(_ == 1000000000L))
   }
 
-  test("PageRank keeps source-only and dangling nodes under both rank joins") {
+  test("PageRank keeps source-only and dangling nodes") {
     val want = refPageRank(sourceAndSink, 4, 1000000L)
     assert(want.keySet == Set(1L, 2L, 3L, 4L, 5L))
     // a node nothing points to keeps exactly its restart term
     assert(want(4L) == 1000000L / 100 * 15)
-    assert(pageRank(sourceAndSink, 4, broadcastRanks = true) == want)
-    assert(pageRank(sourceAndSink, 4, broadcastRanks = false) == want)
+    assert(pageRank(sourceAndSink, 4) == want)
   }
 
   test("personalized PageRank matches the integer reference with a seed set") {
@@ -108,14 +107,11 @@ class AnalyticsSpec extends AnyFunSuite {
     // the seeded source keeps its restart term
     assert(want(4L) == 1000000L / 100 * 15)
     assert(want.keySet == Set(1L, 2L, 3L, 4L, 5L))
-    val bc = pageRank(sourceAndSink, 4, broadcastRanks = true, seeds = Some(seeds))
-    assert(bc == want)
-    assert(pageRank(sourceAndSink, 4, broadcastRanks = false, seeds = Some(seeds)) == bc)
+    assert(pageRank(sourceAndSink, 4, seeds = Some(seeds)) == want)
     // an unseeded node with no in-edges keeps its row, at rank 0
     val unseededSource = refPageRank(sourceAndSink, 4, 1000000L, seeds = Some(Set(3L)))
     assert(unseededSource(4L) == 0L)
-    assert(pageRank(sourceAndSink, 4, broadcastRanks = true, seeds = Some(Set(3L))) ==
-      unseededSource)
+    assert(pageRank(sourceAndSink, 4, seeds = Some(Set(3L))) == unseededSource)
   }
 
   // ------------------------------------------------------- q77 … q81

@@ -1,12 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.functions.{col, sum, udf}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Pin.during]]: frames are cached exactly for the scope and released
-  * on every exit path. [[Pin.fit]]: partitions follow the data size,
-  * capped at the default parallelism, never raised. */
+  * on every exit path. [[Pin.cut]]: the rows are the input's and the
+  * plan carries their measured size. [[Pin.fit]]: partitions follow
+  * the data size, capped at the default parallelism, never raised. */
 class PinSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.hive
@@ -37,6 +40,43 @@ class PinSpec extends AnyFunSuite {
     }
     assert(seen == (((true, true, 10L), true, false)))
     assert(!pinned(outer) && !pinned(inner))
+  }
+
+  private def stats(df: DataFrame): Statistics = df.queryExecution.optimizedPlan.stats
+
+  /** ROADMAP S2's shape: 1,000 groups over 2M rows. */
+  private def smallAggregate: DataFrame =
+    spark.range(0, 2000000, 1, 4).selectExpr("id % 1000 AS k", "id AS v")
+      .groupBy("k").agg(sum("v").as("s"))
+
+  test("cut: the plan's row count is the measured count") {
+    val df = spark.range(0, 10000, 1, 4).where("id % 7 = 0").toDF()
+    assert(stats(Pin.cut(df)).rowCount.contains(BigInt(df.count())))
+  }
+
+  test("cut: an aggregate's size is measured, below the pre-execution estimate") {
+    val agg = smallAggregate
+    val estimate = stats(agg).sizeInBytes
+    val measured = stats(Pin.cut(agg))
+    assert(measured.rowCount.contains(BigInt(1000)))
+    assert(measured.sizeInBytes > 0 && measured.sizeInBytes < estimate,
+      s"measured ${measured.sizeInBytes} B, estimated $estimate B")
+  }
+
+  test("cut: the rows are the input's") {
+    val agg = smallAggregate
+    assert(Pin.cut(agg).orderBy("k").collect().toSeq == agg.orderBy("k").collect().toSeq)
+  }
+
+  test("cut: a throwing frame propagates its exception and keeps no blocks") {
+    val boom = udf((x: Long) => if (x == 3) throw new IllegalStateException("boom") else x)
+    val df = spark.range(0, 10, 1, 2).select(boom(col("id")).as("x"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](Pin.cut(df))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(messages.contains("boom"), messages.mkString(" <- "))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   private def parts(df: DataFrame): Int = df.rdd.getNumPartitions

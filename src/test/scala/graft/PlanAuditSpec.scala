@@ -104,18 +104,19 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ivfSearch: salted shuffle-hash expansion, no SMJ re-sort of the pair stream") {
-    // The round-15 regression class: ivfSearch's public form eagerly
-    // checkpoints its result, so audit the LAZY pipeline directly.
+    // The round-15 regression class: ivfSearch's public form cuts its
+    // result, so audit the LAZY pipeline directly.
     // Assertions pin the scale-critical shape: (a) the expansion join
     // stays a ShuffledHashJoin on the salted key (the explicit
     // repartition + hint — with a handful of coarse lists the bare key
     // has fewer distinct values than the session has cores); (b) no
-    // SortMergeJoin anywhere — an SMJ here means plan statistics were
-    // lost (the localCheckpoint-erases-stats trap: every broadcast
-    // flipped to SMJ and re-sorted the N²/nlist pair stream, measured
-    // 14 s → 430 s at sf1); (c) no cartesian. The former "codebook
-    // join broadcasts" assert is obsolete: since round 14 the centroid
-    // codebook enters as fold-in literals, not a join.
+    // SortMergeJoin anywhere — an SMJ here means some input reached the
+    // planner with an inflated size estimate (every broadcast flipped
+    // to SMJ and re-sorted the N²/nlist pair stream, measured 14 s →
+    // 430 s at sf1 when a cut still kept its pre-execution estimate);
+    // (c) no cartesian. The former "codebook join broadcasts" assert is
+    // obsolete: since round 14 the centroid codebook enters as fold-in
+    // literals, not a join.
     val e = Tables.load(spark, sfDir, "embeddings")
     val p = graft.llm.VectorSearch
       .ivfSearchPlan(e, "vec_id", "embedding", "label", k = 3, nprobe = 2)(
@@ -125,6 +126,22 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"),
       "SMJ in the IVF pipeline means join statistics were lost")
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("a cut small aggregate broadcasts into a join with a larger frame") {
+    // ROADMAP S2: a 1,000-row aggregate over 2M rows keeps a ~23 MB
+    // pre-execution estimate, above the broadcast threshold. Its cut
+    // (Pin.cut) carries the measured size, so with AQE on the join
+    // against a 3M-row frame is planned as a broadcast hash join,
+    // without the two hash shuffles of a sort-merge join.
+    import org.apache.spark.sql.functions.sum
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val small = Pin.cut(spark.range(0, 2000000, 1, 4)
+      .selectExpr("id % 1000 AS k", "id AS v").groupBy("k").agg(sum("v").as("s")))
+    val big = spark.range(0, 3000000, 1, 4).selectExpr("id % 5000 AS k", "id AS w")
+    val plan = big.join(small, "k").queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    assert(!plan.contains("SortMergeJoin"), plan)
   }
 
   test("q117: the partition filter prunes at the scan, not post-read") {

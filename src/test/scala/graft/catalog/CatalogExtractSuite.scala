@@ -112,10 +112,6 @@ class CatalogExtractSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(CatalogOps.listTables(spark, "no_such_db", "*").isEmpty)
   }
 
-  test("count pre-pass (§2.1 #3)") {
-    assert(CatalogOps.countTables(spark, Seq("fixdb", "fixdb2"), "*") == 8)
-  }
-
   test("Hive-bucketed table converts to Spark bucketed DDL (§2.1 #6)") {
     val sql = DdlExtractor.tableCreateSql(spark, "fixdb2", "bucketed_hive")
     assert(sql.contains("CLUSTERED BY"))
